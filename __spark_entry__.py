@@ -244,11 +244,9 @@ def _spark_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spark_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from translink.signatures import shingles_expr
+    from translink.linkage import prep_corpus
 
-    signed = with_block_key(_spark_canonical(spark, sf_dir), CFG).withColumn(
-        "shingles", shingles_expr("canon_text", CFG.shingle_size)
-    )
+    signed = prep_corpus(derive_transcripts(spark, sf_dir), CFG)
     return with_salt(signed, ["block_key"], CFG, order_cols=["canon_text"])
 
 
@@ -1487,62 +1485,37 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["event_asof_join"] = q_event_asof
 
     # -- two-corpus record linkage (A-vs-B mutual-best matching) ------------
-    def q_link_matches(spark, sf_dir):
-        """Classic record linkage: the base corpus (side A) linked against
-        the planted re-delivery corpus (the ``_dup``/``_nd`` conversations,
-        side B) — blocking salted over the COMBINED population, A×B
-        sort-merge pairs, engine score blend, greedy mutual-best one-to-one
-        resolution (translink/linkage.py). Every matched pair is one entity
-        present in both corpora."""
-        from translink.linkage import (
-            link_candidate_pairs, mutual_best_matches,
-        )
-        from translink.signatures import shingles_expr
-
-        c = _spark_canonical(spark, sf_dir)
-        is_b = (
-            F.col("conv_id").endswith("_dup")
-            | F.col("conv_id").endswith("_nd")
-        )
-
-        def prep(df):
-            return with_block_key(df, CFG).withColumn(
-                "shingles", shingles_expr("canon_text", CFG.shingle_size)
-            )
-
-        pairs = link_candidate_pairs(
-            prep(c.filter(~is_b)), prep(c.filter(is_b)), CFG,
-            payload_cols=["canon_text", "shingles"],
-        )
-        scored = score_pairs(pairs, CFG, include_jaro_winkler=False)
-        return mutual_best_matches(scored, CFG).select(
-            "conv_id_a", "conv_id_b", "token_jaccard", "score"
-        )
-    q["link_matches"] = q_link_matches
-
     def _link_scored_with_payload(spark, sf_dir):
-        """Shared A×B scored-pair base for the Fellegi–Sunter queries:
-        same candidate generation as link_matches, numeric payloads
-        carried for the comparison vectors."""
-        from translink.linkage import link_candidate_pairs
-        from translink.signatures import shingles_expr
+        """Shared A×B scored-pair base of the linkage queries: the base
+        corpus (side A) against the planted re-delivery corpus (the
+        ``_dup``/``_nd`` conversations, side B), each side through
+        ``linkage.prep_corpus``; blocking salted over the COMBINED
+        population, A×B sort-merge pairs, engine score blend, numeric
+        payloads carried for the comparison vectors."""
+        from translink.linkage import link_candidate_pairs, prep_corpus
 
-        c = _spark_canonical(spark, sf_dir)
+        t = derive_transcripts(spark, sf_dir)
         is_b = (
             F.col("conv_id").endswith("_dup")
             | F.col("conv_id").endswith("_nd")
         )
-
-        def prep(df):
-            return with_block_key(df, CFG).withColumn(
-                "shingles", shingles_expr("canon_text", CFG.shingle_size)
-            )
-
         pairs = link_candidate_pairs(
-            prep(c.filter(~is_b)), prep(c.filter(is_b)), CFG,
+            prep_corpus(t.filter(~is_b), CFG),
+            prep_corpus(t.filter(is_b), CFG), CFG,
             payload_cols=["canon_text", "shingles", "total_chars"],
         )
         return score_pairs(pairs, CFG, include_jaro_winkler=False)
+
+    def q_link_matches(spark, sf_dir):
+        """Classic record linkage: the shared A×B scored pairs resolved by
+        greedy mutual-best one-to-one (translink/linkage.py). Every
+        matched pair is one entity present in both corpora."""
+        from translink.linkage import mutual_best_matches
+
+        return mutual_best_matches(
+            _link_scored_with_payload(spark, sf_dir), CFG
+        ).select("conv_id_a", "conv_id_b", "token_jaccard", "score")
+    q["link_matches"] = q_link_matches
 
     # -- Fellegi–Sunter match weights (fixed params — the auditable,
     #    ANSI-reproducible lane; weights are Python-computed literals) ------

@@ -10,8 +10,9 @@ BENCH/STREAMING.json (+ a markdown table to stdout for BENCH/STREAMING.md):
   - streaming lane: the transcript table split into N parquet drops in a
     landing dir, drained by ``incremental_signatures`` (foreachBatch,
     ``availableNow``, ``maxFilesPerTrigger`` bounded) — time-to-first is
-    the completion of the FIRST micro-batch, read from the streaming
-    query's own progress events, while later drops are still queued.
+    the completion of the FIRST non-empty micro-batch, recorded by a
+    ``StreamingQueryListener`` as its progress event arrives, while later
+    drops are still queued.
 
 Both lanes do identical per-row work (same canonicalize/minhash stages),
 so the comparison isolates pipelining, exactly like the reference's table.
@@ -31,11 +32,42 @@ import shutil
 import sys
 import tempfile
 import time
+from datetime import datetime, timezone
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from scripts.bench_membw import measure  # noqa: E402
+
+
+class FirstResult(StreamingQueryListener):
+    """Completion time (epoch seconds) of the first micro-batch that read
+    rows, taken from its progress event: trigger start plus the batch's
+    own duration. Unlike ``query.recentProgress``, which keeps only the
+    last ~100 events, the listener sees every batch."""
+
+    def __init__(self):
+        self.done_at: float | None = None
+        self.terminated = False
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        if self.done_at is None and p.numInputRows > 0:
+            start = datetime.strptime(
+                p.timestamp, "%Y-%m-%dT%H:%M:%S.%fZ"
+            ).replace(tzinfo=timezone.utc).timestamp()
+            self.done_at = start + p.batchDuration / 1e3
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated = True
 
 
 def main() -> None:
@@ -97,6 +129,8 @@ def main() -> None:
         batch_wall = round(time.time() - t0, 3)
 
         # -- streaming lane: drain the same drops micro-batch-wise --------
+        first = FirstResult()
+        spark.streams.addListener(first)
         t0 = time.time()
         q = incremental_signatures(
             spark, landing,
@@ -109,20 +143,16 @@ def main() -> None:
         while q.isActive:
             q.awaitTermination(5)
         stream_wall = round(time.time() - t0, 3)
-        # time-to-first-result from the query's OWN progress events: the
-        # first micro-batch that emitted rows has signatures on disk while
-        # the remaining drops are still queued
-        first_ms = None
-        import datetime as dt
-        for p in q.recentProgress:
-            if p.get("numInputRows", 0) > 0:
-                # progress timestamps are ISO-8601 UTC of trigger START;
-                # add the batch's own durationMs to get completion
-                start = dt.datetime.fromisoformat(
-                    p["timestamp"].replace("Z", "+00:00")).timestamp()
-                first_ms = (start - t0) + p["durationMs"]["triggerExecution"] / 1e3
-                break
-        time_to_first = round(first_ms, 3) if first_ms is not None else None
+        # listener events arrive asynchronously: wait for the termination
+        # event, after which every progress event has been delivered
+        deadline = time.time() + 30
+        while not first.terminated and time.time() < deadline:
+            time.sleep(0.1)
+        spark.streams.removeListener(first)
+        # the first micro-batch that read rows has signatures on disk
+        # while the remaining drops are still queued
+        first_s = (first.done_at - t0) if first.done_at is not None else None
+        time_to_first = round(first_s, 3) if first_s is not None else None
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

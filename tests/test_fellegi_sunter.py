@@ -3,7 +3,9 @@
 Pins: hand-computed log2(m/u) weights, comparison-vector banding edges,
 posterior monotonicity, unsupervised EM recovering the planted match rate
 and separating planted matches from in-block non-matches (deterministically),
-and fs_link_tables returning exactly the planted A-B correspondence.
+and ``run_link_pipeline(model="fs")`` returning exactly the planted A-B
+correspondence — plain, and with the term-frequency primitives composed
+on its scored pairs.
 """
 
 import math
@@ -15,8 +17,10 @@ from pyspark.sql import functions as F
 from translink.config import LinkConfig
 from translink.fellegi_sunter import (
     DEFAULT_LAMBDA, DEFAULT_M, DEFAULT_U, FIELDS, FSParams,
-    comparison_vectors, fs_em_fit, fs_link_tables, fs_pattern_counts,
-    fs_score,
+    comparison_vectors, fs_em_fit, fs_pattern_counts, fs_score,
+)
+from translink.linkage import (
+    link_candidate_pairs, mutual_best_matches, prep_corpus, run_link_pipeline,
 )
 
 TS = datetime(2026, 1, 1, 12, 0, 0)
@@ -97,22 +101,12 @@ def test_posterior_monotone_and_extreme():
 
 
 def test_em_recovers_planted_match_rate(spark, planted):
-    from translink.blocking import with_block_key
-    from translink.canonicalize import canonicalize
-    from translink.linkage import link_candidate_pairs
     from translink.scoring import score_pairs
-    from translink.signatures import shingles_expr
 
     cfg = LinkConfig(salt_mode="rank")
     a, b = planted
-
-    def prep(t):
-        c = with_block_key(canonicalize(t, cfg), cfg)
-        return c.withColumn("shingles",
-                            shingles_expr("canon_text", cfg.shingle_size))
-
     pairs = link_candidate_pairs(
-        prep(a), prep(b), cfg,
+        prep_corpus(a, cfg), prep_corpus(b, cfg), cfg,
         payload_cols=["canon_text", "shingles", "total_chars"],
     )
     g = comparison_vectors(score_pairs(pairs, cfg), cfg).localCheckpoint()
@@ -187,9 +181,11 @@ def test_em_fit_order_independent():
     assert p1.n_iter == p2.n_iter
 
 
-def test_fs_link_tables_end_to_end(spark, planted):
+def test_run_link_pipeline_fs_end_to_end(spark, planted):
     a, b = planted
-    got = fs_link_tables(a, b, LinkConfig(salt_mode="rank")).collect()
+    got = run_link_pipeline(
+        spark, a, b, LinkConfig(salt_mode="rank"), model="fs"
+    )["matches"].collect()
     assert {(r.conv_id_a, r.conv_id_b) for r in got} == {
         (f"a{i:02d}", f"b{i:02d}") for i in range(15)
     }
@@ -201,14 +197,13 @@ def test_u_from_random_pairs_corpus_calibrated(spark, planted):
     content fields (random pairs almost never agree on jaccard/lev/prefix),
     deterministic across invocations, and EM with fixed_u must keep it
     frozen while still separating planted matches."""
-    from translink.canonicalize import canonicalize
     from translink.fellegi_sunter import fs_u_from_random_pairs
 
     cfg = LinkConfig()
     a, b = planted
-    ca, cb = canonicalize(a, cfg), canonicalize(b, cfg)
-    u1 = fs_u_from_random_pairs(ca, cb, cfg, sample_per_side=25)
-    u2 = fs_u_from_random_pairs(ca, cb, cfg, sample_per_side=25)
+    pa, pb = prep_corpus(a, cfg), prep_corpus(b, cfg)
+    u1 = fs_u_from_random_pairs(pa, pb, cfg, sample_per_side=25)
+    u2 = fs_u_from_random_pairs(pa, pb, cfg, sample_per_side=25)
     assert u1 == u2  # hash-ordered sample: reproducible, not RNG-dependent
     # disjoint-vocabulary random pairs: agreement levels are ~never hit
     assert u1["g_jac"][0] > 0.95 and u1["g_jac"][2] < 0.05
@@ -220,19 +215,10 @@ def test_u_from_random_pairs_corpus_calibrated(spark, planted):
         assert all(0.0 < v < 1.0 for v in levels), fld
 
     # EM with u frozen: u comes back EXACTLY as passed, m still learns
-    from translink.blocking import with_block_key
-    from translink.linkage import link_candidate_pairs
     from translink.scoring import score_pairs
-    from translink.signatures import shingles_expr
-
-    def prep(c):
-        return with_block_key(c, cfg).withColumn(
-            "shingles", shingles_expr("canon_text", cfg.shingle_size)
-        )
 
     pairs = link_candidate_pairs(
-        prep(ca), prep(cb), cfg,
-        payload_cols=["canon_text", "shingles", "total_chars"],
+        pa, pb, cfg, payload_cols=["canon_text", "shingles", "total_chars"],
     )
     gammas = comparison_vectors(
         score_pairs(pairs, cfg, include_jaro_winkler=False), cfg
@@ -385,12 +371,25 @@ def test_tf_posterior_matches_python_formula(spark):
     assert n_agree == total // FIELDS["g_prefix"]
 
 
-def test_fs_link_tables_tf_end_to_end(spark, planted):
+def test_run_link_pipeline_fs_tf_composition(spark, planted):
+    """Term-frequency decisions compose on ``run_link_pipeline``'s scored
+    pairs: EM fit, value-specific posterior over the combined sides'
+    prefix table, one-to-one resolution on that posterior."""
+    from translink.fellegi_sunter import fs_score_tf, prefix_tf
+
     a, b = planted
-    out = fs_link_tables(a, b, tf_adjust=True).collect()
+    cfg = LinkConfig()
+    res = run_link_pipeline(spark, a, b, cfg, model="fs")
+    gammas = comparison_vectors(res["scored"], cfg)
+    params = fs_em_fit(gammas)
+    both = res["a_prep"].unionByName(res["b_prep"])
+    tf = fs_score_tf(
+        fs_score(gammas, params), prefix_tf(both), both.count(), params
+    ).withColumn("score", F.col("match_prob_tf"))
+    out = mutual_best_matches(tf, cfg, threshold=0.95).collect()
     got = {(r["conv_id_a"], r["conv_id_b"]) for r in out}
     assert got == {(f"a{i:02d}", f"b{i:02d}") for i in range(15)}
-    assert all(r["match_prob"] >= 0.95 for r in out)
+    assert all(r["match_prob_tf"] >= 0.95 for r in out)
 
 
 def test_review_queue_ranks_possible_pairs_per_record(spark):

@@ -5,7 +5,8 @@ The reference's grouping machinery only ever dedups one corpus
 matching across two. These tests pin: cross-corpus-only pair generation,
 combined-population salting, greedy mutual-best resolution (one-to-one,
 deterministic tie-breaks), id-collision safety, and end-to-end matching of
-planted exact/near duplicates across corpora.
+planted exact/near duplicates across corpora through ``run_link_pipeline``
+(the one linkage entry point) for every model.
 """
 
 from datetime import datetime
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 
 from translink.config import LinkConfig
 from translink.linkage import (
-    link_candidate_pairs, link_tables, mutual_best_matches,
+    link_candidate_pairs, mutual_best_matches, prep_corpus, run_link_pipeline,
 )
 
 TS = datetime(2026, 1, 1, 12, 0, 0)
@@ -43,7 +44,7 @@ def _turns(spark, convs):
 
 @pytest.fixture(scope="module")
 def linked(spark):
-    """Planted two-corpus fixture and its end-to-end matches."""
+    """Planted two-corpus fixture and its end-to-end blend matches."""
     a = _turns(spark, {
         "a_exact": [LONG, LONG + " two"],
         "a_near": [LONG, LONG + " three"],
@@ -61,7 +62,7 @@ def linked(spark):
     cfg = LinkConfig(salt_mode="rank")
     return {
         "a": a, "b": b, "cfg": cfg,
-        "matches": link_tables(a, b, cfg).collect(),
+        "matches": run_link_pipeline(spark, a, b, cfg)["matches"].collect(),
     }
 
 
@@ -96,15 +97,12 @@ def test_exact_copy_scores_one(linked):
 
 def test_pairs_are_cross_corpus_only(spark):
     """No A×A or B×B pairs, even when both corpora share a block."""
-    from translink.blocking import with_block_key
-    from translink.canonicalize import canonicalize
-
     cfg = LinkConfig(salt_mode="rank")
     a = _turns(spark, {"a1": [LONG], "a2": [LONG]})
     b = _turns(spark, {"b1": [LONG], "b2": [LONG]})
-    prep = lambda t: with_block_key(canonicalize(t, cfg), cfg)  # noqa: E731
     pairs = link_candidate_pairs(
-        prep(a), prep(b), cfg, payload_cols=["canon_text"]
+        prep_corpus(a, cfg), prep_corpus(b, cfg), cfg,
+        payload_cols=["canon_text"],
     ).collect()
     got = {(r.conv_id_a, r.conv_id_b) for r in pairs}
     assert got == {("a1", "b1"), ("a1", "b2"), ("a2", "b1"), ("a2", "b2")}
@@ -113,15 +111,12 @@ def test_pairs_are_cross_corpus_only(spark):
 def test_id_collision_across_corpora(spark):
     """The same conv_id on both sides is legal (distinct corpora) and can
     match itself; the salt's ordering key disambiguates by side."""
-    from translink.blocking import with_block_key
-    from translink.canonicalize import canonicalize
-
     cfg = LinkConfig(salt_mode="rank")
     a = _turns(spark, {"same_id": [LONG]})
     b = _turns(spark, {"same_id": [LONG]})
-    prep = lambda t: with_block_key(canonicalize(t, cfg), cfg)  # noqa: E731
     pairs = link_candidate_pairs(
-        prep(a), prep(b), cfg, payload_cols=["canon_text"]
+        prep_corpus(a, cfg), prep_corpus(b, cfg), cfg,
+        payload_cols=["canon_text"],
     ).collect()
     assert [(r.conv_id_a, r.conv_id_b) for r in pairs] == [
         ("same_id", "same_id")
@@ -134,13 +129,12 @@ def test_salt_bounds_combined_population(spark):
     12-member block splits into 3 salt sub-blocks, so the A×B fan-out is
     strictly below the unsalted 36 — the bounded-skew trade, and the
     overflow is observable via oversized_blocks."""
-    from translink.blocking import oversized_blocks, with_block_key
-    from translink.canonicalize import canonicalize
+    from translink.blocking import oversized_blocks
 
     cfg = LinkConfig(salt_mode="rank", max_block_size=4)
     a = _turns(spark, {f"a{i}": [LONG] for i in range(6)})
     b = _turns(spark, {f"b{i}": [LONG] for i in range(6)})
-    prep = lambda t: with_block_key(canonicalize(t, cfg), cfg)  # noqa: E731
+    prep = lambda t: prep_corpus(t, cfg)  # noqa: E731
     pairs = link_candidate_pairs(
         prep(a), prep(b), cfg, payload_cols=["canon_text"]
     )
@@ -209,8 +203,6 @@ def test_unlinkable_records_separates_blocking_and_scoring_misses(spark):
 # -- resumable linkage pipeline ---------------------------------------------
 
 def test_run_link_pipeline_resumes_from_checkpoint(spark, tmp_path):
-    from translink.linkage import run_link_pipeline
-
     def turns(convs):
         rows = []
         for cid, text in convs.items():
@@ -249,8 +241,6 @@ def test_run_link_pipeline_resumes_from_checkpoint(spark, tmp_path):
 
 
 def test_run_link_pipeline_fs_model(spark, tmp_path):
-    from translink.linkage import run_link_pipeline
-
     def turns(convs):
         rows = []
         for cid, text in convs.items():
@@ -276,8 +266,6 @@ def test_run_link_pipeline_meta_model(spark, tmp_path):
     key-Jaccard weight 1.0, and a same-fingerprint rerun resumes every
     stage."""
     from datetime import datetime
-
-    from translink.linkage import run_link_pipeline
 
     def turns(convs):
         rows = []
@@ -315,15 +303,12 @@ def test_link_pair_budget_trips_before_join(spark):
     raise PairBudgetExceeded from the O(records) forecast, before the A×B
     join materializes a pair; the forecast counts CROSS-side products only."""
     from translink.blocking import PairBudgetExceeded
-    from translink.canonicalize import canonicalize
-    from translink.blocking import with_block_key
 
     # 40 x 40 same-length single-turn conversations -> one shared block
     a = _turns(spark, {f"a{i:02d}": [f"{LONG} {i:02d}"] for i in range(40)})
     b = _turns(spark, {f"b{i:02d}": [f"{LONG} {i:02d}"] for i in range(40)})
     cfg = LinkConfig(pair_budget=50, max_block_size=512)
-    prep_a = with_block_key(canonicalize(a, cfg), cfg)
-    prep_b = with_block_key(canonicalize(b, cfg), cfg)
+    prep_a, prep_b = prep_corpus(a, cfg), prep_corpus(b, cfg)
     with pytest.raises(PairBudgetExceeded) as exc:
         link_candidate_pairs(prep_a, prep_b, cfg, payload_cols=[])
     assert all(d["lane"] == "link" for d in exc.value.over)
@@ -335,13 +320,9 @@ def test_link_pair_budget_trips_before_join(spark):
 def test_link_pair_budget_forecast_matches_actual(spark):
     """With a generous budget the forecast equals the actual A×B pair count
     (each record holds exactly one (block_key, salt) key)."""
-    from translink.canonicalize import canonicalize
-    from translink.blocking import with_block_key
-
     a = _turns(spark, {f"a{i:02d}": [f"{LONG} {i:02d}"] for i in range(12)})
     b = _turns(spark, {f"b{i:02d}": [f"{LONG} {i:02d}"] for i in range(9)})
     cfg = LinkConfig(pair_budget=10_000, max_block_size=512)
-    prep_a = with_block_key(canonicalize(a, cfg), cfg)
-    prep_b = with_block_key(canonicalize(b, cfg), cfg)
+    prep_a, prep_b = prep_corpus(a, cfg), prep_corpus(b, cfg)
     n = link_candidate_pairs(prep_a, prep_b, cfg, payload_cols=[]).count()
     assert n == 12 * 9

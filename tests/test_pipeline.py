@@ -200,3 +200,27 @@ def test_pair_budget_generous_budget_passes(spark, tiny):
     got = {r["conv_id"]: r["cluster_id"] for r in res["clusters"].collect()}
     want = {r["conv_id"]: r["cluster_id"] for r in base["clusters"].collect()}
     assert got == want
+
+
+def test_pair_budget_with_meta_lane(spark, tiny):
+    """The meta lane under a pair budget: one purged key table feeds both
+    the lane's forecast and its pair generation, so a generous budget
+    leaves the clusters unchanged, and a budget of 1 trips on the meta
+    lane's own forecast."""
+    import pytest
+
+    from translink.blocking import PairBudgetExceeded
+
+    meta = LinkConfig(use_meta_lane=True)
+    base = run_pipeline(spark, tiny["transcripts"], meta)
+    want = {r["conv_id"]: r["cluster_id"] for r in base["clusters"].collect()}
+    res = run_pipeline(
+        spark, tiny["transcripts"],
+        LinkConfig(use_meta_lane=True, pair_budget=10_000_000),
+    )
+    got = {r["conv_id"]: r["cluster_id"] for r in res["clusters"].collect()}
+    assert got == want
+    with pytest.raises(PairBudgetExceeded) as exc:
+        run_pipeline(spark, tiny["transcripts"],
+                     LinkConfig(use_meta_lane=True, pair_budget=1))
+    assert "meta" in {d["lane"] for d in exc.value.over}

@@ -6,11 +6,10 @@ replay-safe per-batch partitions."""
 import os
 from datetime import datetime
 
-from pyspark.sql import functions as F
+import pytest
 
 from translink.config import LinkConfig
-from translink.linkage import link_candidate_pairs, mutual_best_matches
-from translink.scoring import score_pairs
+from translink.linkage import run_link_pipeline
 from translink.streaming.link import (
     incremental_link,
     prepare_reference,
@@ -80,11 +79,21 @@ def test_streaming_link_first_come_first_served(spark, tmp_path):
 
 
 def test_streaming_link_single_drop_equals_batch(spark, tmp_path):
+    """A corpus delivered as one drop gets exactly the batch result of
+    ``run_link_pipeline`` with the same model: same pairs, same scores.
+    The near-duplicate b4 (a3 with one word swapped for another of equal
+    length, so it stays in a3's block) scores below 1.0, so it pins the
+    scorer itself, not just the pair set."""
     landing = str(tmp_path / "landing_b")
     store = str(tmp_path / "store_b")
     os.makedirs(landing)
 
-    b_texts = {"b1": A_TEXTS["a1"], "b3": A_TEXTS["a2"], "b9": "unrelated"}
+    b_texts = {
+        "b1": A_TEXTS["a1"],
+        "b3": A_TEXTS["a2"],
+        "b4": A_TEXTS["a3"].replace("streaming", "buffering"),
+        "b9": "unrelated",
+    }
     a = _turns(spark, A_TEXTS)
     b = _turns(spark, b_texts)
     prepare_reference(spark, a, store, CFG)
@@ -95,32 +104,18 @@ def test_streaming_link_single_drop_equals_batch(spark, tmp_path):
     )
     q.awaitTermination(300)
     streamed = {
-        (r["conv_id_a"], r["conv_id_b"])
+        (r["conv_id_a"], r["conv_id_b"]): r["score"]
         for r in read_match_store(spark, store).collect()
     }
-
-    # the batch operator over the same two corpora (same scorer config)
-    from translink.canonicalize import canonicalize
-    from translink.blocking import with_block_key
-    from translink.signatures import shingles_expr
-
-    def prep(t):
-        c = with_block_key(canonicalize(t, CFG), CFG)
-        return c.withColumn(
-            "shingles", shingles_expr("canon_text", CFG.shingle_size)
-        )
-
-    pairs = link_candidate_pairs(
-        prep(a), prep(b), CFG, payload_cols=["canon_text", "shingles"]
-    )
     batch = {
-        (r["conv_id_a"], r["conv_id_b"])
-        for r in mutual_best_matches(
-            score_pairs(pairs, CFG, include_jaro_winkler=False), CFG
-        ).collect()
+        (r["conv_id_a"], r["conv_id_b"]): r["score"]
+        for r in run_link_pipeline(spark, a, b, CFG)["matches"].collect()
     }
-    assert streamed == batch
+    assert streamed.keys() == batch.keys()
+    for pair, score in batch.items():
+        assert streamed[pair] == pytest.approx(score, abs=1e-12), pair
     assert ("a1", "b1") in streamed
+    assert streamed[("a3", "b4")] < 1.0
 
 
 def test_streaming_link_fs_model(spark, tmp_path):

@@ -59,10 +59,10 @@ def build_parser() -> argparse.ArgumentParser:
                         "pipeline; writes the match report to --output")
     p.add_argument("--link-model", choices=["blend", "fs", "meta"],
                    default="blend",
-                   help="linkage scorer: the engine's similarity blend "
-                        "(linkage.link_tables), the Fellegi-Sunter "
-                        "EM-fit posterior (fellegi_sunter.fs_link_tables), "
-                        "or the schema-free bipartite meta-blocking weight "
+                   help="linkage scorer (linkage.run_link_pipeline "
+                        "model): the engine's similarity blend, the "
+                        "Fellegi-Sunter EM-fit posterior, or the "
+                        "schema-free bipartite meta-blocking weight "
                         "(metablocking.link_meta_pairs)")
     p.add_argument("--progress", nargs="?", const=True, default=False,
                    type=float, metavar="SECONDS",
@@ -159,7 +159,7 @@ def main(argv: list[str] | None = None) -> int:
 def _run_linkage(spark, a_turns, args, cfg) -> int:
     """Two-corpus linkage entry (--link-b): match side A (--input) against
     side B, write/show the match report, print a one-line stats JSON —
-    the CLI face of linkage.link_tables / fellegi_sunter.fs_link_tables."""
+    the CLI face of linkage.run_link_pipeline."""
     from pyspark.sql import functions as F
 
     from translink.catalog import input_content_fingerprint

@@ -599,85 +599,6 @@ def fs_em_from_counts(
     return FSParams(m=m, u=u, lam=lam, n_iter=it, converged=converged)
 
 
-def fs_link_tables(
-    a_turns: DataFrame,
-    b_turns: DataFrame,
-    cfg: LinkConfig | None = None,
-    params: FSParams | None = None,
-    min_match_prob: float = 0.95,
-    u_mode: str = "blocked",
-    tf_adjust: bool = False,
-) -> DataFrame:
-    """End-to-end probabilistic linkage of two corpora.
-
-    Same blocking + A×B candidate generation as ``linkage.link_tables``,
-    but scored by the Fellegi–Sunter model: ``params=None`` fits m/u/λ by
-    EM on this corpus pair's own comparison vectors (one aggregation +
-    driver EM), then pairs with posterior ≥ ``min_match_prob`` resolve to
-    one-to-one matches (greedy mutual-best on the posterior). Returns
-    ``(conv_id_a, conv_id_b, match_weight, match_prob)``.
-
-    ``u_mode`` picks the EM's u calibration (ignored when ``params`` is
-    given): ``"blocked"`` estimates u from the blocked pairs themselves
-    (posterior = in-block quantity, the default decision semantics);
-    ``"random"`` freezes u at ``fs_u_from_random_pairs`` so the posterior
-    and ``min_match_prob`` are corpus-calibrated (module docstring).
-
-    ``tf_adjust=True`` decides on the VALUE-SPECIFIC posterior instead
-    (``fs_score_tf``): the model (fixed or EM-fit) is unchanged, but a
-    pair that agrees on the exact-match prefix is weighted by how rare
-    the agreed value is in the combined corpus — the Splink
-    term-frequency discipline (adjust at scoring, never inside the EM).
-    """
-    from translink.canonicalize import canonicalize
-    from translink.blocking import with_block_key
-    from translink.linkage import link_candidate_pairs, mutual_best_matches
-    from translink.scoring import score_pairs
-    from translink.signatures import shingles_expr
-
-    cfg = cfg or LinkConfig()
-
-    def prep(turns: DataFrame) -> DataFrame:
-        c = with_block_key(canonicalize(turns, cfg), cfg)
-        return c.withColumn(
-            "shingles", shingles_expr("canon_text", cfg.shingle_size)
-        )
-
-    pairs = link_candidate_pairs(
-        prep(a_turns), prep(b_turns), cfg,
-        payload_cols=["canon_text", "shingles", "total_chars"],
-    )
-    scored = score_pairs(pairs, cfg, include_jaro_winkler=False)
-    gammas = comparison_vectors(scored, cfg)
-    if params is None:
-        if u_mode not in ("blocked", "random"):
-            raise ValueError(f"unknown u_mode: {u_mode!r}")
-        fixed_u = (
-            fs_u_from_random_pairs(prep(a_turns), prep(b_turns), cfg)
-            if u_mode == "random"
-            else None
-        )
-        # EM reads the tiny pattern aggregate; the gamma lineage then
-        # re-runs once for scoring — localCheckpoint would trade memory
-        # for that second pass at very large pair sets
-        params = fs_em_fit(gammas, fixed_u=fixed_u)
-    if tf_adjust:
-        combined = prep(a_turns).unionByName(prep(b_turns))
-        n_total = combined.count()
-        probd = fs_score_tf(
-            fs_score(gammas, params), prefix_tf(combined), n_total, params
-        ).withColumn("score", F.col("match_prob_tf"))
-        out = mutual_best_matches(probd, cfg, threshold=min_match_prob)
-        return out.select(
-            "conv_id_a", "conv_id_b", "match_weight",
-            F.col("match_prob_tf").alias("match_prob"),
-        )
-    probd = fs_score(gammas, params).withColumn(
-        "score", F.col("match_prob")
-    )
-    out = mutual_best_matches(probd, cfg, threshold=min_match_prob)
-    return out.select("conv_id_a", "conv_id_b", "match_weight", "match_prob")
-
 # --------------------------------------------------------------------------
 # Term-frequency adjustment (value-specific u for the exact-match field)
 # --------------------------------------------------------------------------

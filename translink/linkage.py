@@ -177,45 +177,6 @@ def mutual_best_matches(
     )
 
 
-def link_tables(
-    a_turns: DataFrame,
-    b_turns: DataFrame,
-    cfg: LinkConfig | None = None,
-    include_jaro_winkler: bool = True,
-    threshold: float | None = None,
-) -> DataFrame:
-    """End-to-end linkage of two raw transcript corpora.
-
-    Canonicalize each side (same stable turn ordering as the dedup
-    pipeline), block on the shared attribute key, shingle once per record
-    (O(n), never O(pairs)), generate salted A×B candidates, score with
-    the engine's blend (exact-text fast path included), and resolve to
-    one-to-one matches. Returns ``(conv_id_a, conv_id_b, token_jaccard,
-    levenshtein_sim, score)`` — one row per matched entity.
-    """
-    from translink.canonicalize import canonicalize
-    from translink.signatures import shingles_expr
-
-    cfg = cfg or LinkConfig()
-
-    def prep(turns: DataFrame) -> DataFrame:
-        c = with_block_key(canonicalize(turns, cfg), cfg)
-        return c.withColumn(
-            "shingles", shingles_expr("canon_text", cfg.shingle_size)
-        )
-
-    pairs = link_candidate_pairs(
-        prep(a_turns), prep(b_turns), cfg,
-        payload_cols=["canon_text", "shingles"],
-    )
-    scored = score_pairs(
-        pairs, cfg, include_jaro_winkler=include_jaro_winkler
-    )
-    keep = ["conv_id_a", "conv_id_b", "token_jaccard", "levenshtein_sim",
-            "score"]
-    return mutual_best_matches(scored, cfg, threshold).select(*keep)
-
-
 def unlinkable_records(
     a_records: DataFrame,
     scored: DataFrame,
@@ -267,10 +228,11 @@ def unlinkable_records(
 
 
 def prep_corpus(turns: DataFrame, cfg: LinkConfig | None = None) -> DataFrame:
-    """Canonicalize + block-key + shingles for one linkage side (the
-    shared prep of ``link_tables``, ``fs_link_tables``,
-    ``streaming.link``, and ``run_link_pipeline``); ``total_chars`` rides
-    along for the FS comparison vectors."""
+    """Canonicalize + block-key + shingles for one linkage side — the one
+    side-prep format, used by ``run_link_pipeline``,
+    ``streaming.link`` (the reference side and every micro-batch) and the
+    driver's linkage and dedup-pair queries; ``total_chars`` rides along
+    for the FS comparison vectors."""
     from translink.canonicalize import canonicalize
     from translink.signatures import shingles_expr
 
@@ -280,6 +242,82 @@ def prep_corpus(turns: DataFrame, cfg: LinkConfig | None = None) -> DataFrame:
         "conv_id", "block_key", "canon_text", "total_chars",
         shingles_expr("canon_text", cfg.shingle_size).alias("shingles"),
     )
+
+
+def _score_and_resolve(
+    a_prep: DataFrame,
+    b_prep: DataFrame,
+    cfg: LinkConfig,
+    model: str,
+    threshold: float | None = None,
+    min_match_prob: float = 0.95,
+    fs_params=None,
+    stage=None,
+    cols: list[str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The A×B core shared by ``run_link_pipeline`` and
+    ``streaming.link.incremental_link``: candidate pairs and scoring, the
+    model's ranking ``score`` + threshold + report columns, then
+    mutual-best resolution. Returns ``(scored, matches)``.
+
+    ``stage(name, build)`` wraps the ``link_scored`` and ``link_matched``
+    steps (the batch path's catalog stages; ``build()`` when None).
+    ``fs_params`` fixes the Fellegi–Sunter model; None fits it by EM over
+    the scored stage. ``cols`` overrides the model's match columns.
+    """
+    stage = stage or (lambda _name, build: build())
+    if model == "meta":
+        from translink.metablocking import link_meta_pairs, shingle_block_keys
+
+        scored = stage(
+            "link_scored",
+            lambda: link_meta_pairs(
+                shingle_block_keys(a_prep, cfg),
+                shingle_block_keys(b_prep, cfg),
+                cfg,
+            ).withColumnRenamed("weight", "score"),
+        )
+        ranked, thr = scored, threshold
+        keep = ["conv_id_a", "conv_id_b", "common_keys", "score"]
+    else:
+        scored = stage(
+            "link_scored",
+            lambda: score_pairs(
+                link_candidate_pairs(
+                    a_prep, b_prep, cfg,
+                    payload_cols=["canon_text", "shingles", "total_chars"],
+                ),
+                cfg,
+                include_jaro_winkler=(model == "blend"),
+            ),
+        )
+        if model == "fs":
+            from translink.fellegi_sunter import (
+                comparison_vectors, fs_em_fit, fs_posterior_literal_expr,
+                fs_weight_expr, fs_weight_threshold,
+            )
+
+            gammas = comparison_vectors(scored, cfg)
+            params = (
+                fs_em_fit(gammas) if fs_params is None else fs_params
+            )
+            ranked = (
+                gammas.withColumn("match_weight", fs_weight_expr(params))
+                .withColumn("match_prob", fs_posterior_literal_expr(params))
+                .withColumn("score", F.col("match_weight"))
+            )
+            thr = fs_weight_threshold(min_match_prob, params)
+            keep = ["conv_id_a", "conv_id_b", "match_weight", "match_prob"]
+        else:
+            ranked, thr = scored, threshold
+            keep = ["conv_id_a", "conv_id_b", "token_jaccard",
+                    "levenshtein_sim", "score"]
+    matches = stage(
+        "link_matched",
+        lambda: mutual_best_matches(ranked, cfg, threshold=thr)
+        .select(*(cols or keep)),
+    )
+    return scored, matches
 
 
 def run_link_pipeline(
@@ -294,24 +332,37 @@ def run_link_pipeline(
     min_match_prob: float = 0.95,
     progress: bool | float = False,
 ) -> dict:
-    """Resumable two-corpus linkage — the linkage family under the same
-    checkpoint/lineage discipline as ``pipeline.run_pipeline``.
+    """Resumable two-corpus linkage — the linkage entry point, under the
+    same checkpoint/lineage discipline as ``pipeline.run_pipeline``.
 
-    With ``workdir`` set, each stage (both side preps, the scored A×B
-    pair set, the resolved matches) persists via the Catalog with the
-    (config, model, input) fingerprint and per-partition lineage; a rerun
-    resumes any stage whose fingerprint matches, so a failed or
-    interrupted linkage job picks up after its last completed stage —
-    including the expensive scored-pair stage. ``model="fs"`` scores with
-    the Fellegi–Sunter EM posterior (ranking on the match weight; the EM
-    itself is deterministic driver arithmetic over the checkpointed
-    scored stage, so resume cannot change the fit); ``"blend"`` uses the
-    similarity blend and ``threshold``; ``"meta"`` scores with the
-    bipartite meta-blocking key-set Jaccard weight
-    (translink/metablocking.py — schema-free: co-occurrence evidence
-    over combined-purged shingle blocks, no pairwise text scorer; the
-    cheapest lane, and the fallback when the corpora's attribute keys
-    do not align).
+    Canonicalize each side, block on the shared attribute key, shingle
+    once per record, generate salted A×B candidates, score, and resolve
+    to one-to-one matches (``_score_and_resolve``, the core the streaming
+    linkage shares). With ``workdir`` set, each stage (both side preps,
+    the scored A×B pair set, the resolved matches) persists via the
+    Catalog with the (config, model, input) fingerprint and per-partition
+    lineage; a rerun resumes any stage whose fingerprint matches, so a
+    failed or interrupted linkage job picks up after its last completed
+    stage — including the expensive scored-pair stage.
+
+    ``model="blend"`` scores with the similarity blend (Jaro-Winkler
+    included) and ``threshold`` (default ``cfg.threshold``); matches are
+    ``(conv_id_a, conv_id_b, token_jaccard, levenshtein_sim, score)``.
+    ``"fs"`` scores with the Fellegi–Sunter EM posterior (ranking on the
+    match weight, keeping pairs whose posterior is at least
+    ``min_match_prob``; the EM itself is deterministic driver arithmetic
+    over the checkpointed scored stage, so resume cannot change the fit);
+    matches are ``(conv_id_a, conv_id_b, match_weight, match_prob)``.
+    ``"meta"`` scores with the bipartite meta-blocking key-set Jaccard
+    weight (translink/metablocking.py — schema-free: co-occurrence
+    evidence over combined-purged shingle blocks, no pairwise text
+    scorer; the cheapest lane, and the fallback when the corpora's
+    attribute keys do not align).
+
+    Random-u calibration and term-frequency adjustment compose on the
+    returned ``scored`` frame: ``fs_em_fit(comparison_vectors(scored),
+    fixed_u=fs_u_from_random_pairs(a_prep, b_prep))`` and
+    ``fs_score_tf(..., prefix_tf(a_prep.unionByName(b_prep)), ...)``.
 
     Returns ``{a_prep, b_prep, scored, matches, timings}``.
     """
@@ -331,57 +382,9 @@ def run_link_pipeline(
     with reporter:
         a_prep = _stage("link_a_prep", lambda: prep_corpus(a_turns, cfg))
         b_prep = _stage("link_b_prep", lambda: prep_corpus(b_turns, cfg))
-        if model == "meta":
-            from translink.metablocking import (
-                link_meta_pairs, shingle_block_keys,
-            )
-
-            scored = _stage(
-                "link_scored",
-                lambda: link_meta_pairs(
-                    shingle_block_keys(a_prep, cfg),
-                    shingle_block_keys(b_prep, cfg),
-                    cfg,
-                ).withColumnRenamed("weight", "score"),
-            )
-        else:
-            scored = _stage(
-                "link_scored",
-                lambda: score_pairs(
-                    link_candidate_pairs(
-                        a_prep, b_prep, cfg,
-                        payload_cols=["canon_text", "shingles", "total_chars"],
-                    ),
-                    cfg,
-                    include_jaro_winkler=(model == "blend"),
-                ),
-            )
-        if model == "meta":
-            ranked, thr = scored, threshold
-            keep = ["conv_id_a", "conv_id_b", "common_keys", "score"]
-        elif model == "fs":
-            from translink.fellegi_sunter import (
-                comparison_vectors, fs_em_fit, fs_posterior_literal_expr,
-                fs_weight_expr, fs_weight_threshold,
-            )
-
-            gammas = comparison_vectors(scored, cfg)
-            params = fs_em_fit(gammas)
-            ranked = (
-                gammas.withColumn("match_weight", fs_weight_expr(params))
-                .withColumn("match_prob", fs_posterior_literal_expr(params))
-                .withColumn("score", F.col("match_weight"))
-            )
-            thr = fs_weight_threshold(min_match_prob, params)
-            keep = ["conv_id_a", "conv_id_b", "match_weight", "match_prob"]
-        else:
-            ranked, thr = scored, threshold
-            keep = ["conv_id_a", "conv_id_b", "token_jaccard",
-                    "levenshtein_sim", "score"]
-        matches = _stage(
-            "link_matched",
-            lambda: mutual_best_matches(ranked, cfg, threshold=thr)
-            .select(*keep),
+        scored, matches = _score_and_resolve(
+            a_prep, b_prep, cfg, model, threshold, min_match_prob,
+            stage=_stage,
         )
     return {
         "a_prep": a_prep, "b_prep": b_prep, "scored": scored,

@@ -6,16 +6,18 @@ kernels so each partition streams through Python in bounded batches (the
 Spark analog of the reference's MIME magic-number detection and
 content-structure analysis, ``src/pipeline/quick_check.rs:292-370``).
 
-Codecs: PNG, BMP, GIF, baseline JPEG and WAV decode FOR REAL via
-pure-stdlib decoders — ``decode_png`` (zlib inflate + per-scanline
-unfilter, public PNG spec / RFC 2083), ``decode_bmp`` (uncompressed
-BITMAPINFOHEADER 8/24-bit), ``decode_gif`` (variable-width LZW, palettes,
-4-pass interlace, public GIF87a/89a spec), ``decode_jpeg`` (baseline
-sequential DCT + canonical Huffman, grayscale / YCbCr 4:4:4, restart
-intervals, public ITU T.81), and ``decode_wav`` (RIFF/WAVE 8/16-bit PCM)
-— no media library needed. Containers without a codec here (video,
-progressive JPEG, subsampled chroma) raise NotImplementedError unless the
-deterministic fake decoder is requested. Everything around the codec
+Codecs: PNG, BMP, GIF, baseline JPEG, AVI Motion-JPEG and WAV decode FOR
+REAL via pure-stdlib decoders — ``decode_png`` (zlib inflate +
+per-scanline unfilter, public PNG spec / RFC 2083), ``decode_bmp``
+(uncompressed BITMAPINFOHEADER 8/24-bit), ``decode_gif`` (variable-width
+LZW, palettes, 4-pass interlace, public GIF87a/89a spec), ``decode_jpeg``
+(baseline sequential DCT + canonical Huffman, grayscale / YCbCr 4:4:4,
+4:2:2 and 4:2:0, restart intervals, public ITU T.81),
+``decode_avi_mjpeg`` (RIFF/AVI demux of Motion-JPEG frames) and
+``decode_wav`` (RIFF/WAVE 8/16-bit PCM) — no media library needed.
+Variants without a codec here (progressive JPEG, 12-bit JPEG, arithmetic
+coding, sampling factors above 2, non-AVI video) raise
+NotImplementedError unless the deterministic fake decoder is requested. Everything around the codec
 boundary — schema, partitioning, UDF signatures, batch iteration,
 metadata extraction — is real and tested either way.
 """

@@ -138,6 +138,20 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
         lsh_pairs = lsh_candidate_pairs(
             bands, signed, cfg, payload_cols=["digest"]
         ).drop("n_bands_hit")
+        if cfg.use_meta_lane:
+            from translink.metablocking import (
+                cnp_prune, filter_blocks, meta_block_pairs, purge_blocks,
+                shingle_block_keys,
+            )
+
+            # the purged key table feeds the lane's volume forecast and
+            # meta_block_pairs, which reads it three times (per-node key
+            # counts + both sides of the self-join): checkpoint it once so
+            # the canonicalize/shingle/explode lineage runs a single time
+            # (q_cluster_graph_stats discipline)
+            meta_keys = purge_blocks(
+                filter_blocks(shingle_block_keys(signed, cfg), cfg), cfg
+            ).localCheckpoint(eager=True)
         if cfg.pair_budget is not None:
             # Pre-flight backpressure (T4 analog): price every lane's exact
             # self-join fan-out from block sizes alone and refuse to start
@@ -156,17 +170,7 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
                 ),
             ]
             if cfg.use_meta_lane:
-                from translink.metablocking import (
-                    filter_blocks, purge_blocks, shingle_block_keys,
-                )
-
-                lanes_fc.append(volume_forecast(
-                    purge_blocks(
-                        filter_blocks(shingle_block_keys(signed, cfg), cfg),
-                        cfg,
-                    ),
-                    ["key"], "meta",
-                ))
+                lanes_fc.append(volume_forecast(meta_keys, ["key"], "meta"))
             enforce_pair_budget(lanes_fc, cfg.pair_budget)
         # One row per distinct pair from either blocker; pairs already equal
         # by digest are resolved on the exact path — exclude them from
@@ -188,19 +192,7 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
             # band/row setting). The lane ships only ids + an 8-byte
             # digest into the union; payloads join downstream like every
             # other lane's survivors.
-            from translink.metablocking import (
-                cnp_prune, filter_blocks, meta_block_pairs, purge_blocks,
-                shingle_block_keys,
-            )
-
-            # meta_block_pairs consumes the purged key table three times
-            # (per-node key counts + both sides of the self-join):
-            # checkpoint it once so the canonicalize/shingle/explode
-            # lineage runs a single time (q_cluster_graph_stats discipline)
-            keys = purge_blocks(
-                filter_blocks(shingle_block_keys(signed, cfg), cfg), cfg
-            ).localCheckpoint(eager=True)
-            meta = cnp_prune(meta_block_pairs(keys, cfg), cfg)
+            meta = cnp_prune(meta_block_pairs(meta_keys, cfg), cfg)
             dig = signed.select("conv_id", "digest")
             meta_pairs = (
                 meta.select("conv_id_a", "conv_id_b")

@@ -4,19 +4,19 @@ The reference enriches records with progressively stronger signatures
 (sampled rolling checksum -> SimHash/fingerprint -> full Blake3; reference
 ``src/pipeline/streaming_quickcheck.rs:162-177``,
 ``src/pipeline/streaming_statistical.rs:183-224``, ``src/pipeline/hash.rs:24-43``).
-Our equivalents, all JVM-side:
+Our equivalents:
 
   - exact digests: ``xxhash64(canon_text)`` (fast path) + ``md5`` (portable,
-    cross-engine-checkable) — analog of the full Blake3 checksum.
-  - MinHash signature: word n-gram shingles -> per-seed min of
-    ``xxhash64(shingle, seed)`` — replaces the reference's SimHash (H8/H9)
+    cross-engine-checkable) — analog of the full Blake3 checksum. JVM-side.
+  - MinHash signature: word n-gram shingle hashes -> per-permutation min of
+    a multiply-shift scramble — replaces the reference's SimHash (H8/H9)
     with the standard MinHash construction whose collision probability equals
-    Jaccard similarity, which is what LSH blocking needs.
+    Jaccard similarity, which is what LSH blocking needs. One numpy kernel
+    per Arrow batch (``make_signature_udf``).
 
-Everything is a single ``select`` over the canonical table: no shuffle, no
-Python. MinHash cost is O(num_hashes x shingles) hash evaluations inside
-whole-stage codegen; shingle count is bounded because canon_text is capped at
-canonicalization.
+Both are a single projection over the canonical table: no shuffle. MinHash
+cost is O(num_hashes x shingles) per row; shingle count is bounded because
+canon_text is capped at canonicalization.
 """
 
 from __future__ import annotations
@@ -272,50 +272,15 @@ def make_shingle_udf(n: int, seed: int = 42):
     return shingle_kernel
 
 
-def make_minhash_udf(k: int, seed: int = 42):
-    """Arrow-batched MinHash kernel: k multiply-shift permutations of the
-    pre-hashed shingle array, min per permutation, fully vectorized in numpy
-    across the batch (one reduceat pass per permutation).
-
-    Why a pandas UDF and not pure SQL expressions: the expression form
-    (transform(sequence(k), i -> array_min(transform(hashes, h -> ...))))
-    nests higher-order lambdas, which Spark evaluates interpreted — outside
-    whole-stage codegen — at ~100x the cost of this numpy kernel. This is
-    exactly the "built-ins genuinely can't express it efficiently" case the
-    Arrow path exists for.
-
-    (a*h + b) with odd ``a`` wraps mod 2^64 — a bijective scramble of the
-    hash space per permutation, the standard multiply-shift MinHash family.
-    Empty shingle sets get the constant sentinel signature [0]*k.
-    """
-    A, B = _minhash_consts(k, seed)
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_kernel(col: pd.Series) -> pd.Series:
-        arrs = [
-            np.asarray(a, dtype=np.int64) if a is not None else np.empty(0, np.int64)
-            for a in col
-        ]
-        return pd.Series(list(_minhash_matrix(arrs, A, B, k)))
-
-    return minhash_kernel
-
-
 def with_minhash(
     canonical: DataFrame,
     cfg: LinkConfig | None = None,
     repartition: int | None = None,
-    method: str = "arrow",
     include_shingles: bool = True,
 ) -> DataFrame:
-    """Add ``shingle_hashes: array<bigint>`` (each shingle xxhash64'd once)
-    and ``minhash: array<bigint>`` signature columns.
-
-    ``method='arrow'`` (default): numpy kernel per Arrow batch
-    (make_minhash_udf). ``method='expr'``: pure-SQL nested higher-order
-    expression — same semantics family, JVM-only, but interpreted (no
-    codegen for nested lambdas), kept for environments where Arrow is
-    unavailable.
+    """Add ``shingle_hashes: array<bigint>`` (each shingle hashed once;
+    omitted with ``include_shingles=False``), ``minhash: array<bigint>``
+    and ``minhash_sketch`` signature columns.
 
     ``repartition``: MinHash is CPU-heavy but byte-light; upstream AQE
     coalescing (or a single small parquet file) can leave it on 1-2
@@ -327,57 +292,21 @@ def with_minhash(
     if repartition:
         canonical = canonical.repartition(repartition)
     k = cfg.num_hashes
-    if method == "arrow":
-        # tokenization, token hashing, shingle construction, dedup and the
-        # k-permutation minhash all run in ONE numpy kernel per Arrow batch
-        # (even single-level lambda expressions are interpreted JVM-side and
-        # lose to the kernel ~30:1 at corpus scale; see PLANS.md)
-        sig = make_signature_udf(k, cfg.shingle_size,
-                                 emit_shingles=include_shingles)
-        out = canonical.withColumn("_sig", sig(F.col("canon_text")))
-        if include_shingles:
-            out = out.withColumn("shingle_hashes", F.col("_sig.shingle_hashes"))
-        return (
-            out
-            .withColumn("minhash", F.col("_sig.minhash"))
-            .withColumn("minhash_sketch", F.col("_sig.minhash_sketch"))
-            .drop("_sig")
-        )
-    base = (
-        canonical
-        .withColumn("_shingles", shingles_expr("canon_text", cfg.shingle_size))
-        # each shingle string is hashed ONCE; everything downstream (minhash
-        # family, exact-jaccard verification) works on compact long arrays
-        .withColumn("shingle_hashes", F.expr("transform(_shingles, s -> xxhash64(s))"))
-        .drop("_shingles")
+    # tokenization, token hashing, shingle construction, dedup and the
+    # k-permutation minhash all run in ONE numpy kernel per Arrow batch
+    # (even single-level lambda expressions are interpreted JVM-side and
+    # lose to the kernel ~30:1 at corpus scale; see PLANS.md)
+    sig = make_signature_udf(k, cfg.shingle_size,
+                             emit_shingles=include_shingles)
+    out = canonical.withColumn("_sig", sig(F.col("canon_text")))
+    if include_shingles:
+        out = out.withColumn("shingle_hashes", F.col("_sig.shingle_hashes"))
+    return (
+        out
+        .withColumn("minhash", F.col("_sig.minhash"))
+        .withColumn("minhash_sketch", F.col("_sig.minhash_sketch"))
+        .drop("_sig")
     )
-    expr = (
-        f"case when size(shingle_hashes) = 0 "
-        f"then transform(sequence(0, {k - 1}), i -> cast(0 as bigint)) "
-        f"else transform(sequence(0, {k - 1}), "
-        f"i -> array_min(transform(shingle_hashes, h -> xxhash64(h, i)))) end"
-    )
-    base = base.withColumn("minhash", F.expr(expr))
-    # byte-lane sketch (flat codegen: 8 ORed byte extracts per output long)
-    sketch = F.array(*[
-        _fold_or([
-            F.shiftleft(
-                F.xxhash64(F.element_at("minhash", p * 8 + j + 1), F.lit(p * 8 + j))
-                .bitwiseAND(F.lit(255)),
-                8 * j,
-            )
-            for j in range(8)
-        ])
-        for p in range(k // 8)
-    ])
-    return base.withColumn("minhash_sketch", sketch)
-
-
-def _fold_or(cols):
-    out = cols[0]
-    for c in cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
 
 
 def minhash_jaccard_expr(a: str = "a.minhash", b: str = "b.minhash"):

@@ -15,8 +15,9 @@ mutual-best becomes FIRST-COME-FIRST-SERVED across batches — an A record
 assigned in an earlier batch is never re-assigned, and a B conversation
 is decided exactly once, on its first delivery (both via anti-joins
 against the match store, sized by matches so far). Within one batch the
-resolution IS the batch operator (``mutual_best_matches``), so a corpus
-delivered as a single drop produces exactly the batch result. The order
+scoring and resolution ARE the batch core (``linkage._score_and_resolve``,
+the one ``run_link_pipeline`` runs), so a corpus delivered as a single
+drop produces exactly the batch result, scores included. The order
 of drops can change WHICH of two competing matches wins — that is the
 inherent price of deciding online; the alternative (deferring every
 contested A) is the batch job, which this module does not replace.
@@ -41,12 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from translink.config import LinkConfig
-from translink.linkage import (
-    link_candidate_pairs,
-    mutual_best_matches,
-    prep_corpus as _prep,
-)
-from translink.scoring import score_pairs
+from translink.fellegi_sunter import FSParams
+from translink.linkage import _score_and_resolve, prep_corpus as _prep
 from translink.streaming.incremental import stream_transcript_dir
 
 A_PREP = "link_a_prep"
@@ -90,7 +87,8 @@ def incremental_link(
     ``translink.streaming.incremental``). Returns the StreamingQuery;
     with ``available_now`` it drains pending files then stops.
 
-    ``model`` picks the scorer: ``"blend"`` ranks and thresholds on the
+    ``model`` picks the scorer, with the same meaning as in
+    ``linkage.run_link_pipeline``: ``"blend"`` ranks and thresholds on the
     similarity blend; ``"fs"`` on the Fellegi–Sunter match weight
     (``score`` in the match store then IS the weight), thresholded at
     the weight whose posterior equals ``min_match_prob``. FS parameters
@@ -102,6 +100,7 @@ def incremental_link(
     if model not in ("blend", "fs"):
         raise ValueError(f"unknown link model: {model}")
     cfg = cfg or LinkConfig()
+    params = fs_params or FSParams()
     a_path = os.path.join(store_dir, A_PREP)
     matches_path = os.path.join(store_dir, MATCHES)
     stream = stream_transcript_dir(spark, landing_dir)
@@ -123,27 +122,12 @@ def incremental_link(
                 prior.select(F.col("conv_id_b").alias("conv_id")),
                 "conv_id", "left_anti",
             )
-        pairs = link_candidate_pairs(
-            a_prep, b_prep, cfg,
-            payload_cols=["canon_text", "shingles", "total_chars"],
+        _, matches = _score_and_resolve(
+            a_prep, b_prep, cfg, model, threshold, min_match_prob,
+            fs_params=params, cols=["conv_id_a", "conv_id_b", "score"],
         )
-        scored = score_pairs(pairs, cfg, include_jaro_winkler=False)
-        if model == "fs":
-            from translink.fellegi_sunter import (
-                FSParams, comparison_vectors, fs_weight_expr,
-                fs_weight_threshold,
-            )
-
-            params = fs_params or FSParams()
-            scored = comparison_vectors(scored, cfg).withColumn(
-                "score", fs_weight_expr(params)
-            )
-            thr = fs_weight_threshold(min_match_prob, params)
-        else:
-            thr = threshold
-        out = mutual_best_matches(scored, cfg, threshold=thr).select(
-            "conv_id_a", "conv_id_b", "score",
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
+        out = matches.withColumn(
+            "batch_id", F.lit(int(batch_id)).cast("long")
         )
         (
             out.write.mode("overwrite")

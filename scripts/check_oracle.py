@@ -52,7 +52,13 @@ def main():
     import os
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = args.sf
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16,
+    # One task slot per CPU of $SPARK_GRAFT_CPUS (get_spark's default
+    # master; all cores without it), two shuffle partitions per slot, and
+    # a heap that fits a 15 GB host unless TRANSLINK_DRIVER_MEM says
+    # otherwise — the engine's 20g default is sized for a large server.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
+    os.environ.setdefault("TRANSLINK_DRIVER_MEM", "4g")
+    spark = get_spark(master=None, shuffle_partitions=2 * cpus,
                       app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:

@@ -423,6 +423,33 @@ def test_review_queue_ranks_possible_pairs_per_record(spark):
     }
 
 
+def test_review_queue_keeps_comparisons_out_of_join_condition(spark, planted):
+    """The queue's ``decision = 'possible'`` filter must not reach the A×B
+    sort-merge join as a join condition: there the decision CASE, with its
+    array Jaccard and Levenshtein, runs per row in the interpreted join
+    loop. Ranking before filtering keeps it in the projection."""
+    from translink.fellegi_sunter import (
+        fs_decide, fs_review_queue, fs_weight_expr,
+    )
+    from translink.scoring import score_pairs
+
+    cfg = LinkConfig(salt_mode="rank")
+    a, b = planted
+    pairs = link_candidate_pairs(
+        prep_corpus(a, cfg), prep_corpus(b, cfg), cfg,
+        payload_cols=["canon_text", "shingles", "total_chars"],
+    )
+    g = comparison_vectors(
+        score_pairs(pairs, cfg, include_jaro_winkler=False), cfg
+    ).withColumn("match_weight", fs_weight_expr())
+    queue = fs_review_queue(fs_decide(g, 8.0, -3.0), per_record_cap=5)
+    plan = queue._jdf.queryExecution().executedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln]
+    assert joins, plan
+    for ln in joins:
+        assert "array_intersect" not in ln and "levenshtein" not in ln, ln
+
+
 # -- waterfall (per-field evidence ledger) ----------------------------------
 
 def test_waterfall_fields_sum_to_match_weight(spark):

@@ -326,3 +326,76 @@ def test_link_pair_budget_forecast_matches_actual(spark):
     prep_a, prep_b = prep_corpus(a, cfg), prep_corpus(b, cfg)
     n = link_candidate_pairs(prep_a, prep_b, cfg, payload_cols=[]).count()
     assert n == 12 * 9
+
+
+# -- side prep on the hashed shingle kernel ---------------------------------
+
+#: Adversarial texts (the tokenizer tri-engine set of test_signatures plus
+#: upper-case, sub-n and empty texts) for the kernel-vs-expression parity.
+ADVERSARIAL = [
+    "",
+    "plain ascii text",
+    "  \t\n leading and trailing \x00\x07 ",
+    "中文文本没有空格",
+    "mixed 中文 and English words",
+    "emoji 😀😀 clusters 🎉 here",
+    "café naïve résumé",
+    "café naïve",
+    "a.b,c;d:e!f?g(h)i[j]k{l}m|n\\o/p~q`r's\"t",
+    "under_scores and-dashes",
+    "digits123mixed456tokens",
+    "ελληνικά κείμενο และ ไทย",
+    "\x7f\x1e\x1f record separators",
+    "regex specials .*+?^$ in text",
+    "ÉCOLE ΟΔΟΣ Straße MIXED case Words",
+    "one two",
+    "x",
+    "...",
+]
+
+
+def test_prep_kernel_jaccard_equals_string_shingle_expression(spark, linked):
+    """Every scored pair's token_jaccard (hashed shingle arrays from
+    prep_corpus) equals the string-shingle expression on the same
+    canonical texts, exactly — over adversarial texts blocked together
+    (one huge length bucket) and the planted fixture pairs."""
+    from translink.scoring import token_jaccard_expr
+
+    cfg = LinkConfig(salt_mode="rank", length_bucket=1_000_000,
+                     shuffle_partitions=4)
+    a = _turns(spark, {f"adv_a{i:02d}": [t]
+                       for i, t in enumerate(ADVERSARIAL)})
+    b = _turns(spark, {
+        f"adv_b{i:02d}": [t + " tail words" if i % 2 else t]
+        for i, t in enumerate(ADVERSARIAL)
+    })
+    scored = run_link_pipeline(
+        spark, a.unionByName(linked["a"]), b.unionByName(linked["b"]), cfg,
+    )["scored"]
+    rows = scored.select(
+        "token_jaccard",
+        token_jaccard_expr(n=cfg.shingle_size).alias("ref"),
+    ).collect()
+    assert len(rows) > len(ADVERSARIAL) ** 2 // 2
+    assert all(r["token_jaccard"] == r["ref"] for r in rows)
+    values = {r["ref"] for r in rows}
+    assert 1.0 in values and 0.0 in values
+    assert any(0.0 < v < 1.0 for v in values)
+
+
+def test_prep_corpus_spreads_hashed_shingles(spark, linked):
+    """prep_corpus runs the shingle kernel on cfg.shuffle_partitions
+    partitions (AQE does not coalesce a fixed-count repartition) and emits
+    hashed shingles."""
+    cfg = LinkConfig(shuffle_partitions=5)
+    prep = prep_corpus(linked["a"], cfg)
+    assert dict(prep.dtypes)["shingles"] == "array<bigint>"
+    assert prep.rdd.getNumPartitions() == cfg.shuffle_partitions
+
+
+def test_engine_version_changes_fingerprint(monkeypatch):
+    """Catalogs written with string shingles (engine version 2) must not
+    resume into the hashed-shingle engine."""
+    current = LinkConfig().fingerprint()
+    monkeypatch.setattr(LinkConfig, "ENGINE_VERSION", 2)
+    assert LinkConfig().fingerprint() != current

@@ -61,6 +61,28 @@ def test_shingles_short_text(spark):
     assert row["s"] == ["one two"]
 
 
+def test_shingles_expr_long_text_matches_reference(spark):
+    """A 3,000-token text: the bound-once token array gives exactly the
+    pure-Python word n-gram set, in first-occurrence order."""
+    import random
+    import re
+
+    from translink.signatures import TOKENIZE_PATTERN
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)] + ["Mixed", "CASE", "中文"]
+    text = ", ".join(" ".join(rng.choice(vocab) for _ in range(10))
+                     for _ in range(300))
+    toks = [t for t in re.split(TOKENIZE_PATTERN, text.lower()) if t]
+    assert len(toks) == 3000
+    want = list(dict.fromkeys(
+        " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)
+    ))
+    df = spark.createDataFrame([("c", text)], "conv_id string, canon_text string")
+    row = df.select(shingles_expr("canon_text", 3).alias("s")).first()
+    assert row["s"] == want
+
+
 def test_empty_text_sentinel_signature(spark):
     cfg = LinkConfig(num_hashes=16)
     df = spark.createDataFrame(

@@ -168,9 +168,10 @@ class LinkConfig:
 
     #: Engine schema/semantics version — bump whenever a stage's output
     #: schema or signature family changes (e.g. 2: minhash_sketch replaced
-    #: minhash_tagged). Folded into the checkpoint fingerprint so a resume
+    #: minhash_tagged; 3: linkage side prep ``shingles`` became hashed
+    #: ``array<bigint>``). Folded into the checkpoint fingerprint so a resume
     #: NEVER reads a stage written by an incompatible engine version.
-    ENGINE_VERSION = 2
+    ENGINE_VERSION = 3
 
     def fingerprint(self) -> str:
         """Deterministic digest of the config + engine version — part of

@@ -232,15 +232,28 @@ def prep_corpus(turns: DataFrame, cfg: LinkConfig | None = None) -> DataFrame:
     side-prep format, used by ``run_link_pipeline``,
     ``streaming.link`` (the reference side and every micro-batch) and the
     driver's linkage and dedup-pair queries; ``total_chars`` rides along
-    for the FS comparison vectors."""
+    for the FS comparison vectors.
+
+    ``shingles`` is ``array<bigint>``: deduped 64-bit hashes of the word
+    ``cfg.shingle_size``-grams from ``make_shingle_udf``, the kernel the
+    dedup scorer uses (set sizes, and so ``jaccard_from_arrays``, equal the
+    string shingles of ``shingles_expr``). The canonical rows are first
+    repartitioned to ``cfg.shuffle_partitions`` by ``conv_id``: the kernel
+    is per-row CPU, and canonicalize's small post-``groupBy`` shuffle is
+    otherwise coalesced by AQE onto one task. A fixed-count repartition is
+    never coalesced (same reasoning as ``with_minhash(repartition=...)``).
+    """
     from translink.canonicalize import canonicalize
-    from translink.signatures import shingles_expr
+    from translink.signatures import make_shingle_udf
 
     cfg = cfg or LinkConfig()
-    c = with_block_key(canonicalize(turns, cfg), cfg)
+    c = with_block_key(canonicalize(turns, cfg), cfg).repartition(
+        cfg.shuffle_partitions, "conv_id"
+    )
     return c.select(
         "conv_id", "block_key", "canon_text", "total_chars",
-        shingles_expr("canon_text", cfg.shingle_size).alias("shingles"),
+        make_shingle_udf(cfg.shingle_size)(F.col("canon_text"))
+        .alias("shingles"),
     )
 
 

@@ -57,13 +57,22 @@ def shingles_expr(col: str = "canon_text", n: int = 3):
 
     Keeps duplicates out (distinct) so MinHash estimates set-Jaccard. For
     texts shorter than ``n`` tokens the whole token sequence is one shingle.
+
+    The token array is bound ONCE, as the lambda variable of a one-element
+    ``transform``: written inline, ``split(lower(text))`` would re-tokenize
+    the whole text at every one of its T-n+1 shingle positions (O(T^2)
+    interpreted work per row). The string form is kept for the callers that
+    must stay JVM-only and ANSI-SQL reproducible (meta-blocking keys, the
+    array-free ``token_jaccard_expr`` fallback, the ``textops`` expression
+    variants); per-record hot paths use the hashed ``make_shingle_udf``.
     """
     toks = f"array_remove(split(lower({col}), '{TOKENIZE_PATTERN_SQL}'), '')"
     return F.expr(
-        f"array_remove(array_distinct(case when size({toks}) <= {n} "
-        f"then array(array_join({toks}, ' ')) "
-        f"else transform(sequence(0, size({toks}) - {n}), "
-        f"i -> array_join(slice({toks}, i + 1, {n}), ' ')) end), '')"
+        f"array_remove(array_distinct(element_at(transform(array({toks}), "
+        f"t -> case when size(t) <= {n} "
+        f"then array(array_join(t, ' ')) "
+        f"else transform(sequence(0, size(t) - {n}), "
+        f"i -> array_join(slice(t, i + 1, {n}), ' ')) end), 1)), '')"
     )
 
 
@@ -259,7 +268,13 @@ def make_shingle_udf(n: int, seed: int = 42):
     ``shingles_expr`` (short texts collapse to one truncated shingle; empty
     rows give an empty array), but shingles are represented by 64-bit hashes
     — set sizes (and therefore Jaccard ratios) are identical modulo
-    negligible 64-bit collisions."""
+    negligible 64-bit collisions.
+
+    Callers: ``pipeline``'s scored stage (prefilter-survivor pair sides),
+    the streaming dedup scorer (``streaming.incremental``),
+    ``linkage.prep_corpus`` (so every linkage front end: ``run_link_pipeline``,
+    ``streaming.link`` and the driver's linkage and dedup-pair queries) and
+    the ``textops`` near-dup lanes under ``method='arrow'``."""
     import re
 
     C = _shingle_consts(n, seed)

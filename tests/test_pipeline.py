@@ -8,6 +8,7 @@ completed stages not recomputed).
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from translink.config import LinkConfig
@@ -17,19 +18,52 @@ from translink.pipeline import run_pipeline
 
 CFG = LinkConfig()
 
+#: Physical nodes that evaluate Python (one Arrow crossing each).
+PY_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+            "MapInArrow", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
 
-def test_end_to_end_f1(spark, tiny):
-    result = run_pipeline(spark, tiny["transcripts"], CFG)
+
+@pytest.fixture(scope="module")
+def tiny_run(spark, tiny):
+    """One no-workdir pipeline over ``tiny``, shared by every test here
+    that only reads the result, with the physical plan (before execution)
+    of the frame each stage writes."""
+    from translink import pipeline
+
+    plans: dict[str, str] = {}
+    runner = pipeline.stage_runner
+
+    def capturing(cat, fp, timings, reporter):
+        inner = runner(cat, fp, timings, reporter)
+
+        def _stage(name, build):
+            def planned():
+                df = build()
+                plans[name] = df._jdf.queryExecution().executedPlan().toString()
+                return df
+
+            return inner(name, planned)
+
+        return _stage
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "stage_runner", capturing)
+        result = run_pipeline(spark, tiny["transcripts"], CFG)
+    return result, plans
+
+
+def test_end_to_end_f1(tiny_run, tiny):
+    result, _ = tiny_run
     prf = pairwise_prf(tiny["labeled_pairs"], result["clusters"])
     assert prf["f1"] >= 0.99, prf
     assert prf["precision"] >= 0.99, prf
     assert prf["recall"] >= 0.99, prf
 
 
-def test_expected_clusters_golden(spark, tiny):
+def test_expected_clusters_golden(tiny_run, tiny):
     """Cluster partition must equal the planted partition exactly (golden
     assert, analog of group-structure asserts in tests/pipeline_test.rs:61-83)."""
-    result = run_pipeline(spark, tiny["transcripts"], CFG)
+    result, _ = tiny_run
     got = result["clusters"]
     expected = tiny["expected_clusters"]
     # compare as partitions: same members <-> same cluster label sets
@@ -45,8 +79,8 @@ def test_expected_clusters_golden(spark, tiny):
     assert diff == 0
 
 
-def test_primary_election(spark, tiny):
-    result = run_pipeline(spark, tiny["transcripts"], CFG)
+def test_primary_election(tiny_run):
+    result, _ = tiny_run
     members = result["members"]
     per_cluster = members.groupBy("cluster_id").agg(
         F.sum(F.col("is_primary").cast("int")).alias("n_primary")
@@ -61,6 +95,55 @@ def test_primary_election(spark, tiny):
         .count()
     )
     assert bad == 0
+
+
+def test_scored_plan_runs_cascade_once_above_joins(tiny_run):
+    """The scoring cascade must not reach a payload join's condition:
+    there the optimizer splits the shingle kernel below the join's
+    exchange (shingling every conversation, not the candidates) and runs
+    Jaccard and Levenshtein a second time in the projection. One Python
+    node evaluates the whole cascade."""
+    _, plans = tiny_run
+    plan = plans["scored"]
+    joins = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln]
+    assert joins, plan
+    for ln in joins:
+        for banned in ("pythonUDF", "levenshtein", "array_intersect"):
+            assert banned not in ln, ln
+    py = [ln for ln in plan.splitlines() if any(n in ln for n in PY_NODES)]
+    assert len(py) == 1, plan
+
+
+def test_pairs_plan_has_only_the_blocking_self_joins(tiny_run):
+    """The exact digests ride the attribute and LSH self-joins: no join
+    back by id for payload or the md5 collision guard."""
+    _, plans = tiny_run
+    plan = plans["pairs"]
+    joins = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln]
+    assert len(joins) == 2, plan
+
+
+def test_xxhash_collision_still_scored(spark, tiny, tiny_run):
+    """The 64-bit collision guard: with every ``digest`` equal (a
+    constant xxhash64) and ``digest_md5`` real, pairs and clusters must
+    equal the unpatched run — a pair is dropped from scoring only when
+    both digests match, exactly as exact_edges links it."""
+    from translink import pipeline
+    from translink.signatures import with_exact_digest
+
+    def colliding(canonical):
+        return with_exact_digest(canonical).withColumn(
+            "digest", F.lit(7).cast("long")
+        )
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "with_exact_digest", colliding)
+        patched = run_pipeline(spark, tiny["transcripts"], CFG)
+    base, _ = tiny_run
+    for stage in ("pairs", "clusters"):
+        got = sorted(tuple(r) for r in patched[stage].collect())
+        want = sorted(tuple(r) for r in base[stage].collect())
+        assert got == want, stage
 
 
 def test_resume_skips_completed_stages(spark, tiny, tmp_path):

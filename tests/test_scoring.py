@@ -124,10 +124,15 @@ def test_jw_numpy_batch_parity_randomized():
 
 
 def test_cascade_edge_set_equivalent(spark):
-    """The two-stage cascade (jaccard lower bound before Levenshtein, then
-    perfect-JW bound before the JW kernel) must produce EXACTLY the edge
-    set of full scoring — including the byte-equal pair whose text is too
-    short to shingle (token_jaccard 0.0, score 1.0 via the exact path)."""
+    """The cascade (jaccard lower bound, then the perfect-JW bound before
+    the JW kernel) must produce EXACTLY the edge set of full scoring —
+    including the byte-equal pair whose text is too short to shingle
+    (token_jaccard 0.0, score 1.0 via the exact path) — and every row it
+    keeps must equal full scoring's row bit for bit, with and without
+    Jaro-Winkler. Covers a random corpus and tokenizer-adversarial texts
+    (CJK, emoji, accents, separators, texts shorter than n tokens, empty
+    texts) with near-duplicate variants of each."""
+    import itertools
     import random
 
     cfg = LinkConfig()
@@ -150,6 +155,28 @@ def test_cascade_edge_set_equivalent(spark):
         else:
             b = " ".join(rng.choice(words) for _ in range(12))
         rows.append((f"p{i}a", f"p{i}b", a, b))
+    # the samples of test_tokenizer_tri_engine_agreement
+    adversarial = [
+        "",
+        "plain ascii text",
+        "  \t\n leading and trailing \x00\x07 ",
+        "中文文本没有空格",
+        "mixed 中文 and English words",
+        "emoji 😀😀 clusters 🎉 here",
+        "café naïve résumé",          # combining-free accents
+        "café naïve",      # combining marks
+        "a.b,c;d:e!f?g(h)i[j]k{l}m|n\\o/p~q`r's\"t",
+        "under_scores and-dashes",     # _ and - are separators
+        "digits123mixed456tokens",
+        "ελληνικά κείμενο และ ไทย",
+        "\x7f\x1e\x1f record separators",
+        "regex specials .*+?^$ in text",
+    ]
+    variants = []
+    for s in adversarial:
+        variants += [s, s + "!", s + " 😀", s[:-1], s.upper()]
+    for i, (a, b) in enumerate(itertools.product(variants, repeat=2)):
+        rows.append((f"q{i}a", f"q{i}b", a, b))
     pairs = spark.createDataFrame(
         rows,
         "conv_id_a string, conv_id_b string, "
@@ -167,3 +194,24 @@ def test_cascade_edge_set_equivalent(spark):
     }
     assert ("x1", "x2") in full
     assert casc == full
+
+    for jw in (True, False):
+        comps = ["token_jaccard", "levenshtein_sim", "score"]
+        comps += ["jaro_winkler"] if jw else []
+
+        def _rows(cascade):
+            scored = score_pairs(pairs, cfg, include_jaro_winkler=jw,
+                                 cascade=cascade)
+            return {
+                (r["conv_id_a"], r["conv_id_b"]): tuple(r[c] for c in comps)
+                for r in scored.select("conv_id_a", "conv_id_b", *comps)
+                .collect()
+            }
+
+        kept, every = _rows(True), _rows(False)
+        assert kept and set(kept) < set(every)
+        # near-duplicate adversarial rows survive the cascade too
+        assert sum(k[0].startswith("q") and v[0] < 1.0
+                   for k, v in kept.items()) > 10
+        for key, got in kept.items():
+            assert got == every[key], (key, got, every[key])

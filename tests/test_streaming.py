@@ -261,3 +261,63 @@ def test_stream_is_incremental(spark, tiny, tmp_path):
     signed = read_signature_store(spark, store)
     assert signed.count() == n1 + 1
     assert signed.filter(F.col("conv_id") == "conv_000000").count() == 1
+
+
+#: Physical nodes that evaluate Python.
+PY_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+            "MapInArrow", "FlatMapGroupsInPandas")
+
+
+def _python_under_exchange(plan: str) -> list[str]:
+    """Python-evaluating nodes of a physical plan string that sit below an
+    Exchange (ancestry read from the tree indentation)."""
+    stack: list[tuple[int, str]] = []
+    found = []
+    for line in plan.splitlines():
+        name = line.lstrip(" :+-")
+        depth = len(line) - len(name)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if any(name.startswith(n) for n in PY_NODES) and any(
+            "Exchange" in anc for _, anc in stack
+        ):
+            found.append(name)
+        stack.append((depth, name))
+    return found
+
+
+def test_incremental_scoring_shingles_candidates_only(spark, tiny, monkeypatch):
+    """A re-cluster's scoring plan evaluates Python only above the payload
+    joins' exchanges: below one, the shingle kernel would run over the
+    whole signature store instead of the candidate pairs."""
+    import pytest
+
+    from translink import scoring
+    from translink.canonicalize import canonicalize
+    from translink.signatures import with_exact_digest, with_minhash
+    from translink.streaming.incremental import recluster_incremental
+
+    class Planned(Exception):
+        pass
+
+    plans = []
+    score_pairs = scoring.score_pairs
+
+    def planning(*args, **kwargs):
+        df = score_pairs(*args, **kwargs)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        raise Planned
+
+    monkeypatch.setattr(scoring, "score_pairs", planning)
+    cfg = LinkConfig()
+    # a materialized store, as read_signature_store reads it from parquet
+    signed = with_minhash(
+        with_exact_digest(canonicalize(tiny["transcripts"], cfg)), cfg
+    ).localCheckpoint(eager=True)
+    prev = signed.select("conv_id", F.col("conv_id").alias("cluster_id"))
+    new_ids = spark.createDataFrame([("conv_000000",)], "conv_id string")
+    with pytest.raises(Planned):
+        recluster_incremental(spark, signed, prev, new_ids, cfg)
+    (plan,) = plans
+    assert any(n in plan for n in PY_NODES), plan
+    assert _python_under_exchange(plan) == [], plan

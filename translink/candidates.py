@@ -79,27 +79,35 @@ def candidate_pairs(
 
 def lsh_candidate_pairs(
     band_keys: DataFrame,
-    signed: DataFrame,
     cfg: LinkConfig | None = None,
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Candidate pairs from LSH band keys.
+    """Candidate pairs from LSH band keys: the salted band self-join.
 
-    ``band_keys`` is the exploded (conv_id, band_id, band_hash) table. Pairs
-    colliding in multiple bands are deduplicated with an aggregation on the
-    pair key *before* fetching payloads, so heavy text columns are joined in
-    exactly once per distinct pair (column-pruned, shuffle on the pair id
-    only). Band buckets are salt-bounded like attribute blocks.
+    ``band_keys`` is the exploded (conv_id, band_id, band_hash) table; each
+    ``payload_cols`` column must already sit on it beside ``conv_id`` and
+    rides the self-join as ``<col>_a``/``<col>_b``. There is no payload
+    join-back by id and no per-pair aggregate: a pair that collides in
+    several bands is emitted once per band, and the caller dedups the
+    union of its lanes (one ``distinct`` on the ids), so keep the carried
+    columns narrow. Band buckets are salt-bounded like attribute blocks.
     """
     cfg = cfg or LinkConfig()
-    payload_cols = payload_cols if payload_cols is not None else PAIR_PAYLOAD
+    payload_cols = list(payload_cols or [])
 
     salted = with_salt(band_keys, ["band_id", "band_hash"], cfg)
     # same fan-out-aware pinning as candidate_pairs (see comment there)
-    left = salted.select("conv_id", "band_id", "band_hash", "salt").repartition(
-        cfg.shuffle_partitions, "band_id", "band_hash", "salt"
-    )
-    pairs = (
+    left = salted.select(
+        "conv_id", "band_id", "band_hash", "salt", *payload_cols
+    ).repartition(cfg.shuffle_partitions, "band_id", "band_hash", "salt")
+    cols = [
+        F.col("a.conv_id").alias("conv_id_a"),
+        F.col("b.conv_id").alias("conv_id_b"),
+    ]
+    for c in payload_cols:
+        cols.append(F.col(f"a.{c}").alias(f"{c}_a"))
+        cols.append(F.col(f"b.{c}").alias(f"{c}_b"))
+    return (
         left.alias("a")
         .hint("MERGE")
         .join(
@@ -111,28 +119,5 @@ def lsh_candidate_pairs(
                 F.col("a.conv_id") < F.col("b.conv_id"),
             ],
         )
-        .select(
-            F.col("a.conv_id").alias("conv_id_a"),
-            F.col("b.conv_id").alias("conv_id_b"),
-        )
-        # one row per distinct pair, however many bands collided
-        .groupBy("conv_id_a", "conv_id_b")
-        .agg(F.count("*").alias("n_bands_hit"))
+        .select(*cols)
     )
-    payload = signed.select("conv_id", *payload_cols)
-    out = (
-        pairs
-        .join(payload.alias("pa"), F.col("conv_id_a") == F.col("pa.conv_id"))
-        .drop("conv_id")
-        .join(payload.alias("pb"), F.col("conv_id_b") == F.col("pb.conv_id"))
-        .drop("conv_id")
-    )
-    renames = {}
-    for c in payload_cols:
-        renames[f"pa.{c}"] = f"{c}_a"
-        renames[f"pb.{c}"] = f"{c}_b"
-    for src, dst in renames.items():
-        out = out.withColumn(dst, F.col(src))
-    return out.select("conv_id_a", "conv_id_b", "n_bands_hit",
-                      *[f"{c}_a" for c in payload_cols],
-                      *[f"{c}_b" for c in payload_cols])

@@ -7,17 +7,24 @@ that resolve early (exact digests) short-circuit past similarity scoring
 stage output checkpoints through the Catalog so a killed run resumes at the
 first stage whose checkpoint is missing or stale (F6 idempotence).
 
+Each candidate pair costs one pass per stage: ``pairs`` carries both exact
+digests of each side through the blocking self-joins, and ``scored`` makes
+one Arrow crossing per pair after its payload joins.
+
 Stage graph::
 
     transcripts
       └─ canonicalize            (1 shuffle: groupBy conv_id)
            └─ signatures          (map-only: digests + minhash)
-                ├─ exact edges    (1 shuffle: window over digest)   ─┐
-                ├─ attribute blocking + salt + self-join pairs       ├─ edges
-                └─ LSH band keys + salted band self-join pairs      ─┘
-                     └─ scoring   (JVM sims + Arrow JW)  → threshold
-                          └─ connected components (iterative, ~2 shuffles/round)
-                               └─ clusters (+ singletons) → report
+                ├─ exact edges    (1 shuffle: window over digest)        ─┐
+                ├─ attribute blocking + salt + self-join ─┐               │
+                └─ LSH band keys + salt + band self-join ─┴─ pairs        ├─ edges
+                     (both carry the digests; drop exact pairs, distinct) │
+                     └─ sketch joins → sketch filter → text joins         │
+                          └─ one cascade kernel (shingle jaccard, bounds, │
+                             Jaro-Winkler) → threshold                   ─┘
+                               └─ connected components (iterative, ~2 shuffles/round)
+                                    └─ clusters (+ singletons) → report
 """
 
 from __future__ import annotations
@@ -26,7 +33,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from translink.blocking import lsh_band_keys, with_block_key, with_salt
+from translink.blocking import band_hashes_expr, with_block_key, with_salt
 from translink.candidates import candidate_pairs, lsh_candidate_pairs
 from translink.canonicalize import canonicalize
 from translink.catalog import Catalog
@@ -118,10 +125,16 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
     )
 
     def _build_pairs() -> DataFrame:
+        # Every lane carries both exact digests of each side through its
+        # own self-join — the 8-byte xxhash64 and the md5 as its 16 raw
+        # bytes — so a pair already resolved on the exact path drops before
+        # the one distinct, with no join back by id.
+        exact_cols = ["digest", "_md5"]
+        keyed = signed.withColumn("_md5", F.unhex("digest_md5"))
         # Attribute blocking (A1 analog) with skew salt — gated to short
         # conversations (cfg.attr_max_chars), where shingle statistics are
         # too thin for LSH; long conversations are covered by the LSH path.
-        attr_side = signed
+        attr_side = keyed
         if cfg.attr_max_chars is not None:
             attr_side = attr_side.filter(F.col("total_chars") <= cfg.attr_max_chars)
         blocked = with_salt(
@@ -132,12 +145,15 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
             # short-circuit at the first differing byte
             order_cols=["canon_text"],
         )
-        attr_pairs = candidate_pairs(blocked, cfg, payload_cols=["digest"])
-        # LSH band blocking (A4 analog).
-        bands = lsh_band_keys(signed, cfg)
-        lsh_pairs = lsh_candidate_pairs(
-            bands, signed, cfg, payload_cols=["digest"]
-        ).drop("n_bands_hit")
+        attr_pairs = candidate_pairs(blocked, cfg, payload_cols=exact_cols)
+        # LSH band blocking (A4 analog): lsh_band_keys' explode, with the
+        # digests beside conv_id on every band row
+        bands = keyed.select(
+            "conv_id", *exact_cols,
+            F.posexplode(band_hashes_expr(cfg.lsh_bands, cfg.lsh_rows))
+            .alias("band_id", "band_hash"),
+        )
+        lsh_pairs = lsh_candidate_pairs(bands, cfg, payload_cols=exact_cols)
         if cfg.use_meta_lane:
             from translink.metablocking import (
                 cnp_prune, filter_blocks, meta_block_pairs, purge_blocks,
@@ -172,74 +188,54 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
             if cfg.use_meta_lane:
                 lanes_fc.append(volume_forecast(meta_keys, ["key"], "meta"))
             enforce_pair_budget(lanes_fc, cfg.pair_budget)
-        # One row per distinct pair from either blocker; pairs already equal
-        # by digest are resolved on the exact path — exclude them from
-        # similarity scoring (the reference's early-exit, src/pipeline/mod.rs:92-95).
-        # The exclusion must require BOTH digests equal (exactly complementary
-        # to exact_edges, which links on digest AND digest_md5): a pair
-        # colliding on 64-bit xxhash64 alone would otherwise be dropped from
-        # scoring yet never linked by the exact path — a silently lost true
-        # pair at 1e9+ conversation scale. The md5 check runs AFTER the
-        # distinct, on the (tiny) digest-equal subset only, so the 32-byte
-        # hex strings never ride the pre-distinct self-join shuffle — only an
-        # 8-byte digest (folded to one boolean map-side) does.
-        pair_cols = ["conv_id_a", "conv_id_b", "digest_a", "digest_b"]
+        pair_cols = ["conv_id_a", "conv_id_b",
+                     *[f"{c}_{s}" for c in exact_cols for s in "ab"]]
         lanes = [attr_pairs.select(*pair_cols), lsh_pairs.select(*pair_cols)]
         if cfg.use_meta_lane:
             # Opt-in lane 3: CNP-pruned shingle meta-blocking graph
             # (translink/metablocking.py) — recall insurance for pairs all
             # of whose MinHash bands miss (P[miss] is nonzero at any
-            # band/row setting). The lane ships only ids + an 8-byte
-            # digest into the union; payloads join downstream like every
-            # other lane's survivors.
+            # band/row setting). Its pairs pick up both digests by id.
             meta = cnp_prune(meta_block_pairs(meta_keys, cfg), cfg)
-            dig = signed.select("conv_id", "digest")
-            meta_pairs = (
-                meta.select("conv_id_a", "conv_id_b")
-                .join(dig.select(F.col("conv_id").alias("conv_id_a"),
-                                 F.col("digest").alias("digest_a")),
-                      "conv_id_a")
-                .join(dig.select(F.col("conv_id").alias("conv_id_b"),
-                                 F.col("digest").alias("digest_b")),
-                      "conv_id_b")
-            )
+            dig = keyed.select("conv_id", *exact_cols)
+            meta_pairs = meta.select("conv_id_a", "conv_id_b")
+            for s in "ab":
+                meta_pairs = meta_pairs.join(
+                    dig.select(F.col("conv_id").alias(f"conv_id_{s}"),
+                               *[F.col(c).alias(f"{c}_{s}") for c in exact_cols]),
+                    f"conv_id_{s}",
+                )
             lanes.append(meta_pairs.select(*pair_cols))
         cand = lanes[0]
         for lane in lanes[1:]:
             cand = cand.union(lane)
-        cand = (
-            cand
-            .select(
-                "conv_id_a", "conv_id_b",
-                (F.col("digest_a") == F.col("digest_b")).alias("_dig_eq"),
-            )
-            .distinct()  # _dig_eq is a function of the pair: still pair-distinct
+        # Pairs equal on BOTH digests are resolved on the exact path —
+        # exclude them from similarity scoring (the reference's early exit,
+        # src/pipeline/mod.rs:92-95). This is the exact complement of
+        # exact_edges, which links on digest AND digest_md5: a pair that
+        # collides on the 64-bit xxhash64 alone is still scored, never
+        # silently lost. Then one distinct over the ids, however many lanes
+        # and bands emitted the pair.
+        exact_pair = (
+            (F.col("digest_a") == F.col("digest_b"))
+            & (F.col("_md5_a") == F.col("_md5_b"))
         )
-        survivors = cand.filter(~F.col("_dig_eq")).select("conv_id_a", "conv_id_b")
-        md5 = signed.select("conv_id", "digest_md5")
-        rescued = (
-            cand.filter(F.col("_dig_eq"))
-            .join(md5.select(F.col("conv_id").alias("conv_id_a"),
-                             F.col("digest_md5").alias("_m_a")), "conv_id_a")
-            .join(md5.select(F.col("conv_id").alias("conv_id_b"),
-                             F.col("digest_md5").alias("_m_b")), "conv_id_b")
-            .filter(F.col("_m_a") != F.col("_m_b"))
-            .select("conv_id_a", "conv_id_b")
-        )
-        return survivors.union(rescued)
+        return cand.filter(~exact_pair).select("conv_id_a", "conv_id_b").distinct()
 
     pairs = _stage("pairs", _build_pairs)
 
     def _build_scored() -> DataFrame:
-        # Pair-side similarity runs as a three-step cascade (P1, cheap to
-        # expensive), and the JOINS follow the cascade too — the full text /
-        # shingle payload only ever shuffles for prefilter survivors:
-        #   1. MinHash-estimated jaccard on position-tagged signatures
-        #      (native array_intersect on 64-long arrays — no per-pair
-        #      lambdas) with a conservative margin below the exact bound;
-        #      kills ~99% of candidate pairs with a 0.5KB/side payload;
-        #   2. exact jaccard on hashed shingles (long-array set ops);
-        #   3. Levenshtein + Jaro-Winkler only for remaining survivors.
+        # Pair-side similarity runs as a cheap-to-expensive cascade (P1),
+        # and the JOINS follow it — canon_text only ships for pairs that
+        # pass the sketch filter:
+        #   1. MinHash-sketch estimated jaccard with a conservative margin
+        #      below the exact bound, over a 64-byte/side payload. It is a
+        #      loose filter, not the main cut: on the `small` fixture 798 of
+        #      1,694 candidate pairs pass it;
+        #   2. text joins, then score_pairs(cascade=True): Levenshtein in
+        #      the JVM projection under one mapInPandas kernel that
+        #      reshingles each pair side, takes exact jaccard, applies both
+        #      bounds and runs Jaro-Winkler for the survivors only.
         from translink.scoring import jaccard_lower_bound
 
         # minhash_sketch packs one byte per position-scrambled signature
@@ -278,15 +274,6 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
             .filter(est >= max(0.0, bound - margin))
             .select("conv_id_a", "conv_id_b")
         )
-        # shingle hashes are recomputed per survivor pair side (a vanishing
-        # fraction of the corpus) instead of persisting/shuffling the
-        # corpus-wide shingle column
-        # shingle-only kernel: the full signature UDF also computes the
-        # k-permutation minhash + byte sketch per pair side only to throw
-        # them away (and ships them back over Arrow)
-        from translink.signatures import make_shingle_udf
-
-        sig = make_shingle_udf(cfg.shingle_size)
         payload = signed.select("conv_id", "canon_text")
         enriched = (
             survivors
@@ -304,8 +291,6 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
                 ),
                 "conv_id_b",
             )
-            .withColumn("shingles_a", sig(F.col("canon_text_a")))
-            .withColumn("shingles_b", sig(F.col("canon_text_b")))
         )
         return score_pairs(enriched, cfg, cascade=True).select(
             "conv_id_a", "conv_id_b",

@@ -12,6 +12,11 @@ token-Jaccard + Levenshtein + Jaro-Winkler:
     crossing the JVM boundary; texts capped at cfg.jw_text_cap so per-pair
     cost is O(cap^2) worst case and independent of document size).
 
+Dedup edge generation (``score_pairs(cascade=True)``) computes the same
+components in one ``mapInPandas`` kernel instead: Jaccard from the hashed
+shingle sets, Jaro-Winkler for the pairs the cascade bounds keep, and
+Levenshtein in the JVM projection under it.
+
 Edges = pairs with blended score >= cfg.threshold (analog of
 similarity_threshold 85.0, reference ``src/pipeline/stats.rs:44``).
 """
@@ -239,6 +244,103 @@ def jaccard_lower_bound(cfg: LinkConfig, include_jaro_winkler: bool = True) -> f
     return max(0.0, (cfg.threshold * w_sum - w_rest) / cfg.w_jaccard)
 
 
+def _blend(cfg: LinkConfig, include_jaro_winkler: bool):
+    """The weighted blend of the component columns (the non-exact score)."""
+    terms = [
+        F.col("token_jaccard") * cfg.w_jaccard,
+        F.col("levenshtein_sim") * cfg.w_levenshtein,
+    ]
+    w_sum = cfg.w_jaccard + cfg.w_levenshtein
+    if include_jaro_winkler:
+        terms.append(F.col("jaro_winkler") * cfg.w_jaro_winkler)
+        w_sum += cfg.w_jaro_winkler
+    return sum(terms[1:], terms[0]) / w_sum
+
+
+def _pair_jaccard(sh_a: list, sh_b: list) -> "np.ndarray":
+    """Per-row Jaccard of two lists of deduped shingle-hash arrays, from
+    the set sizes. ``inter / union`` is the same float64 division as
+    ``jaccard_from_arrays``; an empty union scores 0.0 there and here."""
+    import numpy as np
+
+    m = len(sh_a)
+    inter = np.fromiter(
+        (np.intersect1d(a, b, assume_unique=True).size
+         for a, b in zip(sh_a, sh_b)),
+        dtype=np.int64, count=m,
+    )
+    union = (np.fromiter(map(len, sh_a), dtype=np.int64, count=m)
+             + np.fromiter(map(len, sh_b), dtype=np.int64, count=m) - inter)
+    jac = np.zeros(m, dtype=np.float64)
+    nz = union > 0
+    jac[nz] = inter[nz] / union[nz]
+    return jac
+
+
+def _cascade(pairs: DataFrame, cfg: LinkConfig, include_jaro_winkler: bool):
+    """``score_pairs(cascade=True)``: one ``mapInPandas`` pass per pair.
+
+    A JVM projection directly under the kernel adds ``_exact`` (byte-equal
+    texts) and ``levenshtein_sim``. The kernel shingles both texts with
+    ``signatures.shingler`` (the hash family of ``make_shingle_udf``),
+    takes Jaccard from the set sizes, drops the pairs that fail the
+    Jaccard bound or the perfect-Jaro-Winkler bound (exact pairs exempt)
+    and runs the batch Jaro-Winkler on the survivors only. The optimizer
+    pushes no predicate through ``mapInPandas``, so none of this reaches a
+    join condition or runs twice. Every input column crosses to Python,
+    so callers pass ids and texts only."""
+    import numpy as np
+    from pyspark.sql.types import StructField, StructType
+
+    from translink.signatures import shingler
+
+    shingle = shingler(cfg.shingle_size)
+    jac_bound = jaccard_lower_bound(cfg, include_jaro_winkler)
+    w_sum = cfg.w_jaccard + cfg.w_levenshtein + cfg.w_jaro_winkler
+    w_j, w_l, w_jw = cfg.w_jaccard, cfg.w_levenshtein, cfg.w_jaro_winkler
+    thr, cap = cfg.threshold, cfg.jw_text_cap
+
+    staged = pairs.withColumns({
+        "_exact": F.col("canon_text_a") == F.col("canon_text_b"),
+        "levenshtein_sim": levenshtein_sim_expr(cfg.lev_text_cap),
+    })
+    added = [StructField("token_jaccard", DoubleType())]
+    if include_jaro_winkler:
+        added.append(StructField("jaro_winkler", DoubleType()))
+    out_schema = StructType([*staged.schema.fields, *added])
+
+    def kernel(batches):
+        for pdf in batches:
+            m = len(pdf)
+            texts = pd.concat([pdf["canon_text_a"], pdf["canon_text_b"]],
+                              ignore_index=True)
+            sh = shingle(texts)
+            jac = _pair_jaccard(sh[:m], sh[m:])
+            exact = pdf["_exact"].eq(True).to_numpy()
+            keep = jac >= jac_bound
+            if include_jaro_winkler:
+                # stage 2: assume a perfect JW; a pair that still cannot
+                # clear the threshold never needs the kernel at all
+                lev = pdf["levenshtein_sim"].to_numpy(dtype=np.float64)
+                keep &= (jac * w_j + lev * w_l + w_jw) / w_sum >= thr
+            keep |= exact
+            out = pdf[keep].assign(token_jaccard=jac[keep])
+            if include_jaro_winkler:
+                jw = np.ones(len(out), dtype=np.float64)
+                todo = ~exact[keep]
+                if todo.any():
+                    jw[todo] = _jw_batch_numpy(
+                        np.array([(t or "")[:cap] for t in
+                                  out["canon_text_a"][todo]], dtype=object),
+                        np.array([(t or "")[:cap] for t in
+                                  out["canon_text_b"][todo]], dtype=object),
+                    )
+                out = out.assign(jaro_winkler=jw)
+            yield out
+
+    return staged.mapInPandas(kernel, out_schema)
+
+
 def score_pairs(
     pairs: DataFrame,
     cfg: LinkConfig | None = None,
@@ -253,68 +355,49 @@ def score_pairs(
     ``src/pipeline/mod.rs:92-95``).
 
     ``cascade=True`` runs the reference's cheap-to-expensive discipline in
-    two stages: pairs whose token_jaccard already rules out reaching
-    ``cfg.threshold`` drop before Levenshtein runs, and pairs whose
-    jaccard+Levenshtein blend cannot reach it even with a PERFECT
-    Jaro-Winkler drop before the (pandas-UDF) JW runs. Byte-equal pairs
-    are exempt from both drops (they score 1.0 regardless of components —
-    an empty-shingle exact pair has token_jaccard 0.0). Edge-set-
-    equivalent to full scoring but skips the O(len^2) work for the (vast)
-    majority of candidate pairs. Use for edge generation; leave off when
-    every pair's full score is the deliverable.
+    one Arrow kernel after the payload joins (``_cascade``): pairs whose
+    token_jaccard already rules out reaching ``cfg.threshold`` drop, and
+    so do pairs whose jaccard+Levenshtein blend cannot reach it even with a
+    PERFECT Jaro-Winkler; Jaro-Winkler runs for the rest only. Byte-equal
+    pairs are exempt from both drops (they score 1.0 regardless of
+    components — an empty-shingle exact pair has token_jaccard 0.0). The
+    kept rows equal full scoring's bit for bit, so the thresholded edge set
+    is unchanged. The kernel shingles the texts itself (``shingles_a/b``
+    are not read) and every input column crosses to Python, so pass ids
+    and texts only. Use for edge generation; leave off when every pair's
+    full score is the deliverable.
     """
     cfg = cfg or LinkConfig()
-    exact = F.col("canon_text_a") == F.col("canon_text_b")
-    if "shingles_a" in pairs.columns and "shingles_b" in pairs.columns:
-        jac = jaccard_from_arrays()
-    else:
-        jac = token_jaccard_expr(n=cfg.shingle_size)
-    scored = pairs.withColumn("token_jaccard", jac)
     if cascade:
-        scored = scored.filter(
-            exact
-            | (
-                F.col("token_jaccard")
-                >= jaccard_lower_bound(cfg, include_jaro_winkler)
-            )
-        )
-    scored = scored.withColumns({
-        "levenshtein_sim": levenshtein_sim_expr(cfg.lev_text_cap),
-    })
-    if cascade and include_jaro_winkler:
-        # stage 2: assume a perfect JW; a pair that still cannot clear the
-        # threshold never needs the (most expensive) kernel at all
-        w_sum = cfg.w_jaccard + cfg.w_levenshtein + cfg.w_jaro_winkler
-        best_possible = (
-            F.col("token_jaccard") * cfg.w_jaccard
-            + F.col("levenshtein_sim") * cfg.w_levenshtein
-            + F.lit(cfg.w_jaro_winkler)
-        ) / w_sum
-        scored = scored.filter(exact | (best_possible >= cfg.threshold))
-    if include_jaro_winkler:
-        jw = F.when(exact, F.lit(1.0)).otherwise(
-            jaro_winkler_udf(
-                F.substring("canon_text_a", 1, cfg.jw_text_cap),
-                F.substring("canon_text_b", 1, cfg.jw_text_cap),
-            )
-        )
-        w_sum = cfg.w_jaccard + cfg.w_levenshtein + cfg.w_jaro_winkler
-        blend = (
-            F.col("token_jaccard") * cfg.w_jaccard
-            + F.col("levenshtein_sim") * cfg.w_levenshtein
-            + F.col("jaro_winkler") * cfg.w_jaro_winkler
-        ) / w_sum
+        scored = _cascade(pairs, cfg, include_jaro_winkler)
+        exact = F.col("_exact")
     else:
-        jw = None
-        w_sum = cfg.w_jaccard + cfg.w_levenshtein
-        blend = (
-            F.col("token_jaccard") * cfg.w_jaccard
-            + F.col("levenshtein_sim") * cfg.w_levenshtein
-        ) / w_sum
-    if jw is not None:
-        scored = scored.withColumn("jaro_winkler", jw)
+        exact = F.col("canon_text_a") == F.col("canon_text_b")
+        if "shingles_a" in pairs.columns and "shingles_b" in pairs.columns:
+            jac = jaccard_from_arrays()
+        else:
+            jac = token_jaccard_expr(n=cfg.shingle_size)
+        scored = pairs.withColumns({
+            "token_jaccard": jac,
+            "levenshtein_sim": levenshtein_sim_expr(cfg.lev_text_cap),
+        })
+        if include_jaro_winkler:
+            scored = scored.withColumn(
+                "jaro_winkler",
+                F.when(exact, F.lit(1.0)).otherwise(jaro_winkler_udf(
+                    F.substring("canon_text_a", 1, cfg.jw_text_cap),
+                    F.substring("canon_text_b", 1, cfg.jw_text_cap),
+                )),
+            )
+    components = ["token_jaccard", "levenshtein_sim"]
+    if include_jaro_winkler:
+        components.append("jaro_winkler")
     return scored.withColumn(
-        "score", F.when(exact, F.lit(1.0)).otherwise(blend)
+        "score",
+        F.when(exact, F.lit(1.0)).otherwise(_blend(cfg, include_jaro_winkler)),
+    ).select(
+        *[c for c in pairs.columns if c not in (*components, "score")],
+        *components, "score",
     )
 
 

@@ -113,9 +113,10 @@ def _shingle_rows(texts, pat, C, n: int) -> list:
     """Per-row deduped word-n-gram shingle hashes for one Arrow batch.
 
     The ONE implementation of the batch tokenize -> hash -> n-gram-combine
-    -> dedup sequence (shared by the signature and shingle kernels): the
-    hash family feeding MinHash, LSH bands, and the scorer's recomputed
-    pair-side shingles must be bit-identical, so it must not be duplicated.
+    -> dedup sequence (shared by the signature, shingle and dedup cascade
+    kernels): the hash family feeding MinHash, LSH bands, and the scorer's
+    recomputed pair-side shingles must be bit-identical, so it must not be
+    duplicated.
     Tokenizes with the compiled ``pat`` (C regex), hashes every token of
     the batch in one C-vectorized pass (pandas siphash, deterministic fixed
     key), combines n-grams numerically (s_i = C1*h_i + C2*h_{i+1} + ...,
@@ -259,6 +260,17 @@ def make_signature_udf(k: int, n: int, seed: int = 42, emit_shingles: bool = Tru
     return signature_kernel
 
 
+def shingler(n: int, seed: int = 42):
+    """texts -> per-row deduped word-n-gram shingle-hash arrays: the body of
+    the shingle kernel as a plain batch function, for kernels that shingle
+    inside a larger Arrow pass (``scoring.score_pairs(cascade=True)``)."""
+    import re
+
+    C = _shingle_consts(n, seed)
+    pat = re.compile(TOKENIZE_PATTERN)
+    return lambda texts: _shingle_rows(texts, pat, C, n)
+
+
 def make_shingle_udf(n: int, seed: int = 42):
     """Arrow-batched hashed-shingle kernel: text -> deduped array<bigint> of
     word n-gram shingle hashes. The hot-path replacement for the interpreted
@@ -270,19 +282,15 @@ def make_shingle_udf(n: int, seed: int = 42):
     — set sizes (and therefore Jaccard ratios) are identical modulo
     negligible 64-bit collisions.
 
-    Callers: ``pipeline``'s scored stage (prefilter-survivor pair sides),
-    the streaming dedup scorer (``streaming.incremental``),
-    ``linkage.prep_corpus`` (so every linkage front end: ``run_link_pipeline``,
-    ``streaming.link`` and the driver's linkage and dedup-pair queries) and
-    the ``textops`` near-dup lanes under ``method='arrow'``."""
-    import re
-
-    C = _shingle_consts(n, seed)
-    pat = re.compile(TOKENIZE_PATTERN)
+    Callers: ``linkage.prep_corpus`` (so every linkage front end:
+    ``run_link_pipeline``, ``streaming.link`` and the driver's linkage and
+    dedup-pair queries) and the ``textops`` near-dup lanes under
+    ``method='arrow'``. The dedup cascade kernel uses ``shingler``."""
+    shingle = shingler(n, seed)
 
     @pandas_udf(ArrayType(LongType()))
     def shingle_kernel(texts: pd.Series) -> pd.Series:
-        return pd.Series(_shingle_rows(texts, pat, C, n))
+        return pd.Series(shingle(texts))
 
     return shingle_kernel
 

@@ -218,7 +218,6 @@ def recluster_incremental(
     from translink.blocking import lsh_band_keys, with_block_key
     from translink.clustering import connected_components
     from translink.scoring import score_pairs
-    from translink.signatures import make_shingle_udf
 
     cfg = cfg or LinkConfig()
     new_signed = signed.join(new_ids, "conv_id", "left_semi")
@@ -287,12 +286,9 @@ def recluster_incremental(
         | (F.col("digest_md5_a") != F.col("digest_md5_b"))
     ).select("conv_id_a", "conv_id_b")
 
+    # ids + texts only: the cascade kernel reshingles each pair side
+    # itself, above the payload joins (no corpus-wide shingle pass)
     payload = signed.select("conv_id", "canon_text")
-    # shingle-only kernel: the full signature UDF would also compute the
-    # k-permutation minhash + byte sketch per pair side only to discard
-    # them (and ship them back over Arrow) — same fix as pipeline.py's
-    # scored stage
-    sig_udf = make_shingle_udf(cfg.shingle_size)
     enriched = (
         sim_pairs
         .join(payload.select(F.col("conv_id").alias("conv_id_a"),
@@ -301,8 +297,6 @@ def recluster_incremental(
         .join(payload.select(F.col("conv_id").alias("conv_id_b"),
                              F.col("canon_text").alias("canon_text_b")),
               "conv_id_b")
-        .withColumn("shingles_a", sig_udf(F.col("canon_text_a")))
-        .withColumn("shingles_b", sig_udf(F.col("canon_text_b")))
     )
     scored = score_pairs(enriched, cfg, cascade=True)
     sim_new_edges = scored.filter(F.col("score") >= cfg.threshold).select(

@@ -122,9 +122,12 @@ def main() -> None:
 
         # -- batch lane: results exist only when the whole pass finishes --
         t0 = time.time()
+        # the stream's columns: the batch `signed` stage's, without the
+        # corpus-wide shingle_hashes
         signed = with_minhash(
             with_exact_digest(
-                canonicalize(spark.read.parquet(landing), cfg)), cfg)
+                canonicalize(spark.read.parquet(landing), cfg)), cfg,
+            include_shingles=False)
         signed.write.mode("overwrite").parquet(os.path.join(work, "batch_out"))
         batch_wall = round(time.time() - t0, 3)
 

@@ -3,6 +3,7 @@ signatures, store read-back (T1-T7 analogs; SURVEY §2.9)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from translink import fixtures
@@ -195,13 +196,17 @@ def test_replacement_redelivery_drops_deleted_turns(spark, tmp_path):
     assert got_m["digest_md5"] == digest_of(original.filter("conv_id = 'A'"), cfg_m)
 
 
-def test_incremental_recluster_matches_batch(spark, tiny, tmp_path):
-    """Two drops + affected-component re-clustering == one-shot batch
-    clustering over the merged corpus (byte-identical labels)."""
+def _labels(clusters):
+    return sorted(tuple(r) for r in
+                  clusters.select("conv_id", "cluster_id").collect())
+
+
+@pytest.fixture(scope="module")
+def recluster_tiny(spark, tiny):
+    """Inputs of a two-drop re-cluster over ``tiny`` and its result: the
+    previous clusters of a 70% old corpus, the full signature store and
+    the 30% of new ids."""
     from translink.canonicalize import canonicalize
-    from translink.clustering import (
-        clusters_with_singletons, connected_components, exact_edges,
-    )
     from translink.pipeline import run_pipeline
     from translink.signatures import with_exact_digest, with_minhash
     from translink.streaming.incremental import recluster_incremental
@@ -224,17 +229,86 @@ def test_incremental_recluster_matches_batch(spark, tiny, tmp_path):
         [(c,) for c in sorted(new_ids)], "conv_id string"
     )
     inc = recluster_incremental(spark, signed_all, prev, new_df, cfg)
+    return {
+        "transcripts": t, "signed": signed_all, "prev": prev, "new": new_df,
+        "clusters": _labels(inc),
+    }
 
-    batch = run_pipeline(spark, t, cfg)["clusters"]
-    diff = (
-        inc.withColumnRenamed("cluster_id", "inc_cl")
-        .join(batch, "conv_id", "full")
-        .filter(
-            F.col("inc_cl").isNull() | F.col("cluster_id").isNull()
-            | (F.col("inc_cl") != F.col("cluster_id"))
-        )
+
+def test_incremental_recluster_matches_batch(spark, recluster_tiny):
+    """Two drops + affected-component re-clustering == one-shot batch
+    clustering over the merged corpus (byte-identical labels)."""
+    from translink.pipeline import run_pipeline
+
+    batch = run_pipeline(spark, recluster_tiny["transcripts"], LinkConfig())
+    assert recluster_tiny["clusters"] == _labels(batch["clusters"])
+
+
+def test_recluster_xxhash_collision_still_scored(spark, recluster_tiny):
+    """The 64-bit collision guard in the re-cluster: with every ``digest``
+    equal (a constant xxhash64) and ``digest_md5`` real, the re-cluster
+    must equal the unpatched one — a new pair skips scoring only when both
+    carried digests match."""
+    from translink.streaming.incremental import recluster_incremental
+
+    colliding = recluster_tiny["signed"].withColumn(
+        "digest", F.lit(7).cast("long")
     )
-    assert diff.count() == 0, diff.limit(20).collect()
+    inc = recluster_incremental(
+        spark, colliding, recluster_tiny["prev"], recluster_tiny["new"],
+        LinkConfig(),
+    )
+    assert _labels(inc) == recluster_tiny["clusters"]
+
+
+def test_mixed_format_store_reads_signed_columns(spark, tiny, tmp_path,
+                                                 monkeypatch):
+    """A store holding a batch written with the corpus-wide
+    ``shingle_hashes`` column (as stores signed before it was dropped do)
+    and a batch without it reads back with exactly the batch ``signed``
+    stage's columns, including a conversation split across the two."""
+    from translink.canonicalize import canonicalize
+    from translink.signatures import with_exact_digest, with_minhash
+    from translink.streaming import incremental
+
+    landing = str(tmp_path / "landing_mixed")
+    store = str(tmp_path / "store_mixed")
+    ckpt = str(tmp_path / "ckpt_mixed")
+    os.makedirs(landing)
+    t = tiny["transcripts"]
+    victim = "conv_000000"
+    first = t.filter(
+        (F.col("conv_id") == victim) & (F.col("turn_idx") < 2)
+        | (F.col("conv_id") == "conv_000001")
+    )
+    second = t.filter(
+        (F.col("conv_id") == victim) & (F.col("turn_idx") >= 2)
+        | (F.col("conv_id") == "conv_000002")
+    )
+    old_format = incremental.with_minhash
+    with monkeypatch.context() as mp:
+        mp.setattr(incremental, "with_minhash",
+                   lambda df, cfg, **_: old_format(df, cfg))
+        first.coalesce(1).write.parquet(os.path.join(landing, "d0"))
+        incremental_signatures(
+            spark, os.path.join(landing, "*"), store, ckpt, available_now=True
+        ).awaitTermination(300)
+    second.coalesce(1).write.parquet(os.path.join(landing, "d1"))
+    incremental_signatures(
+        spark, os.path.join(landing, "*"), store, ckpt, available_now=True
+    ).awaitTermination(300)
+
+    cfg = LinkConfig()
+    batch = with_minhash(
+        with_exact_digest(canonicalize(t, cfg)), cfg, include_shingles=False
+    )
+    signed = read_signature_store(spark, store)
+    assert signed.columns == batch.columns
+    rows = {r["conv_id"]: r for r in signed.collect()}
+    assert set(rows) == {victim, "conv_000001", "conv_000002"}
+    want = batch.filter(F.col("conv_id") == victim).first()
+    assert rows[victim]["digest_md5"] == want["digest_md5"]
+    assert rows[victim]["minhash"] == want["minhash"]
 
 
 def test_stream_is_incremental(spark, tiny, tmp_path):
@@ -290,9 +364,7 @@ def test_incremental_scoring_shingles_candidates_only(spark, tiny, monkeypatch):
     """A re-cluster's scoring plan evaluates Python only above the payload
     joins' exchanges: below one, the shingle kernel would run over the
     whole signature store instead of the candidate pairs."""
-    import pytest
-
-    from translink import scoring
+    from translink import pipeline
     from translink.canonicalize import canonicalize
     from translink.signatures import with_exact_digest, with_minhash
     from translink.streaming.incremental import recluster_incremental
@@ -301,14 +373,14 @@ def test_incremental_scoring_shingles_candidates_only(spark, tiny, monkeypatch):
         pass
 
     plans = []
-    score_pairs = scoring.score_pairs
+    score_pairs = pipeline.score_pairs
 
     def planning(*args, **kwargs):
         df = score_pairs(*args, **kwargs)
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         raise Planned
 
-    monkeypatch.setattr(scoring, "score_pairs", planning)
+    monkeypatch.setattr(pipeline, "score_pairs", planning)
     cfg = LinkConfig()
     # a materialized store, as read_signature_store reads it from parquet
     signed = with_minhash(

@@ -141,3 +141,40 @@ def test_streaming_link_fs_model(spark, tmp_path):
     from translink.fellegi_sunter import fs_weight_threshold
 
     assert rows["b1"]["score"] >= fs_weight_threshold(0.95)
+
+
+def test_reference_store_fingerprinted(spark, tmp_path, monkeypatch):
+    """The reference store is a catalog stage under the config
+    fingerprint: a store prepped with another shingle size, or by another
+    engine version, is refused before the stream starts, with both
+    fingerprints named; a matching store is read."""
+    landing = str(tmp_path / "landing_fp")
+    os.makedirs(landing)
+    a = _turns(spark, A_TEXTS)
+    _turns(spark, {"b1": A_TEXTS["a1"]}).coalesce(1).write.parquet(
+        os.path.join(landing, "d0")
+    )
+
+    def link(store):
+        return incremental_link(
+            spark, os.path.join(landing, "*"), store,
+            str(tmp_path / "ckpt_fp"), CFG, available_now=True,
+        )
+
+    other = LinkConfig(shingle_size=CFG.shingle_size + 1)
+    prepare_reference(spark, a, str(tmp_path / "store_k"), other)
+    with monkeypatch.context() as mp:
+        mp.setattr(LinkConfig, "ENGINE_VERSION", 2)
+        old_fp = CFG.fingerprint()
+        prepare_reference(spark, a, str(tmp_path / "store_v2"), CFG)
+    for store, found in (("store_k", other.fingerprint()),
+                         ("store_v2", old_fp)):
+        with pytest.raises(ValueError) as err:
+            link(str(tmp_path / store))
+        assert found in str(err.value) and CFG.fingerprint() in str(err.value)
+
+    store = str(tmp_path / "store_fp")
+    prepare_reference(spark, a, store, CFG)
+    link(store).awaitTermination(300)
+    (row,) = read_match_store(spark, store).collect()
+    assert (row["conv_id_a"], row["conv_id_b"]) == ("a1", "b1")

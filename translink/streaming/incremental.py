@@ -15,6 +15,12 @@ across multiple batches and re-canonicalizes them from the turn store —
 their per-batch partial signatures are discarded. No whole-conversation-
 per-file drop convention is required for correctness.
 
+Re-clustering a drop (``recluster_incremental``) builds its candidate pairs
+with the batch pipeline's carried digests, band table and exact-pair
+predicate, and scores them with the batch ``scored`` step itself
+(``pipeline.score_candidates``): batch and streaming dedup share one pair
+core.
+
 ``availableNow`` trigger = the reference's Flush/Shutdown drain semantics;
 ``maxFilesPerTrigger`` = its bounded channel capacity (backpressure, T4).
 No event-time windows/watermarks are needed — the reference has none either
@@ -38,6 +44,16 @@ TRANSCRIPT_DDL = (
 
 SIGNATURES = "signatures"
 TURNS = "turns"
+
+
+def _signed(turns: DataFrame, cfg: LinkConfig) -> DataFrame:
+    """Canonicalize and sign turns into the batch ``signed`` stage's
+    columns (no corpus-wide ``shingle_hashes``: scoring reshingles each
+    candidate pair side itself). No repartition: a micro-batch is small,
+    and a ``shuffle_partitions``-way split would write that many files."""
+    return with_minhash(
+        with_exact_digest(canonicalize(turns, cfg)), cfg, include_shingles=False
+    )
 
 
 def stream_transcript_dir(
@@ -86,9 +102,8 @@ def incremental_signatures(
             "_batch_id", F.lit(int(batch_id)).cast("long")
         )
         stamped.write.mode("append").parquet(os.path.join(store_dir, TURNS))
-        signed = with_minhash(with_exact_digest(canonicalize(batch_df, cfg)), cfg)
         (
-            signed
+            _signed(batch_df, cfg)
             .withColumn("_batch_id", F.lit(int(batch_id)).cast("long"))
             .write.mode("append").parquet(os.path.join(store_dir, SIGNATURES))
         )
@@ -176,10 +191,11 @@ def read_signature_store(
         .filter(F.col("_batch_id") == F.col("_lb"))
         .drop("_lb", "_batch_id")
     )
-    repaired = with_minhash(
-        with_exact_digest(canonicalize(merged_turns, cfg)), cfg
-    )
-    return clean.unionByName(repaired)
+    repaired = _signed(merged_turns, cfg)
+    # project the streamed rows onto the signed columns: batches written
+    # before signing dropped ``shingle_hashes`` still carry it, and which
+    # file's schema Spark reads the directory with depends on file order
+    return clean.select(*repaired.columns).unionByName(repaired)
 
 
 def recluster_incremental(
@@ -209,99 +225,64 @@ def recluster_incremental(
 
     Equivalence contract: the result is byte-identical to a one-shot batch
     run over the merged corpus whenever no attribute/LSH block exceeds
-    ``cfg.max_block_size`` (asserted in tests/test_streaming.py). When a
-    block overflows, batch mode salts it — a size-dependent partition that
-    can drop different in-block pairs run-over-run — while the incremental
-    path scores every new-touching pair in the block, so incremental recall
-    is >= the salted batch run there.
+    ``cfg.max_block_size`` (asserted in tests/test_streaming.py). It holds
+    because the candidate pairs are scored by the batch pipeline's own
+    ``scored`` step (``pipeline.score_candidates``, sketch prefilter
+    included) and split off the exact path by the same carried digests
+    and predicate. When a block overflows, batch mode salts it — a
+    size-dependent partition that can drop different in-block pairs
+    run-over-run — while the incremental path scores every new-touching
+    pair in the block, so incremental recall is >= the salted batch run
+    there.
     """
-    from translink.blocking import lsh_band_keys, with_block_key
     from translink.clustering import connected_components
-    from translink.scoring import score_pairs
+    from translink.pipeline import (
+        EXACT_COLS, attr_block_keys, exact_band_keys, exact_pair,
+        score_candidates, with_exact_cols,
+    )
+    from translink.scoring import edges
 
     cfg = cfg or LinkConfig()
-    new_signed = signed.join(new_ids, "conv_id", "left_semi")
 
     # -- candidate pairs touching at least one new conversation ----------
-    def _sided(df: DataFrame, keys: list[str]) -> DataFrame:
-        return df.select("conv_id", *keys)
+    keyed = with_exact_cols(signed)
+    new_keyed = keyed.join(new_ids, "conv_id", "left_semi")
 
-    attr_all = signed
-    if cfg.attr_max_chars is not None:
-        attr_all = attr_all.filter(F.col("total_chars") <= cfg.attr_max_chars)
-    attr_new = attr_all.join(new_ids, "conv_id", "left_semi")
-    ab = with_block_key(attr_all, cfg)
-    nb = with_block_key(attr_new, cfg)
-    attr_pairs = (
-        _sided(nb, ["block_key"]).alias("a")
-        .hint("MERGE")
-        .join(
-            _sided(ab, ["block_key"]).alias("b"),
-            on=[
-                F.col("a.block_key") == F.col("b.block_key"),
-                F.col("a.conv_id") != F.col("b.conv_id"),
-            ],
+    def touching(block_keys, keys: list[str]) -> DataFrame:
+        # every new row against every row sharing a key with it; both
+        # sides carry their exact digests through the join
+        side = ["conv_id", *EXACT_COLS]
+        return (
+            block_keys(new_keyed, cfg).alias("a")
+            .hint("MERGE")
+            .join(
+                block_keys(keyed, cfg).alias("b"),
+                on=[*(F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys),
+                    F.col("a.conv_id") != F.col("b.conv_id")],
+            )
+            .select(*(F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                      for c in side for s in "ab"))
         )
-        .select(
-            F.least("a.conv_id", "b.conv_id").alias("conv_id_a"),
-            F.greatest("a.conv_id", "b.conv_id").alias("conv_id_b"),
-        )
-    )
-    bands_all = lsh_band_keys(signed, cfg)
-    bands_new = lsh_band_keys(new_signed, cfg)
-    lsh_pairs = (
-        bands_new.alias("a")
-        .hint("MERGE")
-        .join(
-            bands_all.alias("b"),
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col("a.conv_id") != F.col("b.conv_id"),
-            ],
-        )
-        .select(
-            F.least("a.conv_id", "b.conv_id").alias("conv_id_a"),
-            F.greatest("a.conv_id", "b.conv_id").alias("conv_id_b"),
-        )
-    )
-    dig = signed.select("conv_id", "digest", "digest_md5")
+
     pairs = (
-        attr_pairs.union(lsh_pairs).distinct()
-        .join(dig.select(F.col("conv_id").alias("conv_id_a"),
-                         F.col("digest").alias("digest_a"),
-                         F.col("digest_md5").alias("digest_md5_a")), "conv_id_a")
-        .join(dig.select(F.col("conv_id").alias("conv_id_b"),
-                         F.col("digest").alias("digest_b"),
-                         F.col("digest_md5").alias("digest_md5_b")), "conv_id_b")
+        touching(attr_block_keys, ["block_key"])
+        .union(touching(exact_band_keys, ["band_id", "band_hash"]))
+        .select(
+            F.least("conv_id_a", "conv_id_b").alias("conv_id_a"),
+            F.greatest("conv_id_a", "conv_id_b").alias("conv_id_b"),
+            exact_pair().alias("_exact"),
+        )
+        .distinct()
     )
     # exact path: byte-equal new-old/new-new pairs become edges directly
-    exact_new_edges = (
-        pairs.filter((F.col("digest_a") == F.col("digest_b"))
-                     & (F.col("digest_md5_a") == F.col("digest_md5_b")))
-        .select(F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst"))
-    )
-    sim_pairs = pairs.filter(
-        (F.col("digest_a") != F.col("digest_b"))
-        | (F.col("digest_md5_a") != F.col("digest_md5_b"))
-    ).select("conv_id_a", "conv_id_b")
-
-    # ids + texts only: the cascade kernel reshingles each pair side
-    # itself, above the payload joins (no corpus-wide shingle pass)
-    payload = signed.select("conv_id", "canon_text")
-    enriched = (
-        sim_pairs
-        .join(payload.select(F.col("conv_id").alias("conv_id_a"),
-                             F.col("canon_text").alias("canon_text_a")),
-              "conv_id_a")
-        .join(payload.select(F.col("conv_id").alias("conv_id_b"),
-                             F.col("canon_text").alias("canon_text_b")),
-              "conv_id_b")
-    )
-    scored = score_pairs(enriched, cfg, cascade=True)
-    sim_new_edges = scored.filter(F.col("score") >= cfg.threshold).select(
+    exact_new_edges = pairs.filter("_exact").select(
         F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
     )
+    scored = score_candidates(
+        pairs.filter(~F.col("_exact")).select("conv_id_a", "conv_id_b"),
+        signed, cfg,
+    )
+    sim_new_edges = edges(scored, cfg).select("src", "dst")
     new_edges = exact_new_edges.union(sim_new_edges).localCheckpoint(eager=True)
 
     # -- affected components: previous clusters touching any new edge -----

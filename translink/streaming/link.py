@@ -29,10 +29,10 @@ overwrites its own output instead of double-appending, and never sees its
 own half-written matches as "taken".
 
 Scale shape: the static side is prepped ONCE (canonicalize + block key +
-shingles, persisted to the store as parquet, re-read per batch — no
-driver-held state, no broadcast); per-batch cost is the batch's own
-blocking + the sparse A-candidate join, and the anti-joins scan only the
-match store (|matches|, not |A|).
+shingles, persisted to the store as a catalog stage under the config
+fingerprint, re-read per batch — no driver-held state, no broadcast);
+per-batch cost is the batch's own blocking + the sparse A-candidate join,
+and the anti-joins scan only the match store (|matches|, not |A|).
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from translink.catalog import Catalog
 from translink.config import LinkConfig
 from translink.fellegi_sunter import FSParams
 from translink.linkage import _score_and_resolve, prep_corpus as _prep
@@ -57,13 +58,13 @@ def prepare_reference(
     cfg: LinkConfig | None = None,
 ) -> str:
     """Canonicalize + block + shingle the static A corpus once, persisted
-    to ``store_dir`` so every micro-batch re-reads columnar parquet
-    instead of re-running the A-side lineage. Returns the parquet path."""
+    to ``store_dir`` as a catalog stage stamped with ``cfg.fingerprint()``
+    so every micro-batch re-reads columnar parquet instead of re-running
+    the A-side lineage. Returns the stage path."""
     cfg = cfg or LinkConfig()
-    os.makedirs(store_dir, exist_ok=True)
-    path = os.path.join(store_dir, A_PREP)
-    _prep(a_turns, cfg).write.mode("overwrite").parquet(path)
-    return path
+    cat = Catalog(spark, store_dir)
+    cat.write_stage(A_PREP, _prep(a_turns, cfg), cfg.fingerprint())
+    return cat.stage_path(A_PREP)
 
 
 def incremental_link(
@@ -80,7 +81,9 @@ def incremental_link(
 ):
     """Link a stream of B-side transcript drops against the prepared A.
 
-    ``prepare_reference`` must have run against ``store_dir`` first.
+    ``prepare_reference`` must have run against ``store_dir`` first, with
+    a config of the same fingerprint (engine version included): a store
+    prepped otherwise raises ``ValueError`` before the stream starts.
     Drops must deliver whole conversations (the walker contract; for
     split/re-delivered conversations, assemble upstream with
     ``translink.streaming.assemble`` or the turn-store repair in
@@ -101,14 +104,21 @@ def incremental_link(
         raise ValueError(f"unknown link model: {model}")
     cfg = cfg or LinkConfig()
     params = fs_params or FSParams()
-    a_path = os.path.join(store_dir, A_PREP)
+    cat = Catalog(spark, store_dir)
+    fp = cfg.fingerprint()
+    if not cat.has_stage(A_PREP, fp):
+        found = cat.lineage().get(A_PREP, {}).get("fingerprint")
+        raise ValueError(
+            f"reference store {store_dir!r} holds {A_PREP} with fingerprint "
+            f"{found!r}, this config's is {fp!r}: rerun prepare_reference"
+        )
     matches_path = os.path.join(store_dir, MATCHES)
     stream = stream_transcript_dir(spark, landing_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        a_prep = spark.read.parquet(a_path)
+        a_prep = cat.read_stage(A_PREP)
         b_prep = _prep(batch_df, cfg)
         prior = _read_matches_before(spark, matches_path, int(batch_id))
         if prior is not None:

@@ -22,3 +22,18 @@ def tiny(spark):
         "expected_clusters": spark.createDataFrame(data["expected_clusters"]).cache(),
         "pandas": data,
     }
+
+
+def jobs_started(spark, fn):
+    """Run ``fn()``; return its result and the ids of the Spark jobs it
+    started: the status tracker's job ids after the call minus those
+    before it, each read once the listener bus has delivered every
+    event."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    result = fn()
+    bus.waitUntilEmpty()
+    return result, sorted(set(tracker.getJobIdsForGroup()) - before)

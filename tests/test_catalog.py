@@ -1,15 +1,59 @@
 """Catalog / input-layer behaviors: partitioned-input pruning (F3 analog —
 the reference's depth-limit predicate maps to partition-value predicates on
-a partitioned table) and content-based resume invalidation (F6 idempotence
-that survives an input overwritten in place)."""
+a partitioned table), content-based resume invalidation (F6 idempotence
+that survives an input overwritten in place) and checkpoint read-back with
+the manifest's recorded schema (a resume starts no Spark job)."""
 
+import json
 import os
 
+import pytest
+from conftest import jobs_started
 from pyspark.sql import functions as F
 
-from translink.catalog import input_content_fingerprint
+from translink.catalog import Catalog, input_content_fingerprint
 from translink.config import LinkConfig
+from translink.linkage import run_link_pipeline
 from translink.pipeline import run_pipeline
+
+CFG = LinkConfig()
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def dedup_run(spark, tiny, tmp_path_factory):
+    """One checkpointed ``tiny`` dedup pass, shared by this module; its
+    clusters are collected before any test re-runs into the workdir."""
+    wd = str(tmp_path_factory.mktemp("dedup_catalog"))
+    res = run_pipeline(spark, tiny["transcripts"], CFG, workdir=wd)
+    return {"workdir": wd, "clusters": _sorted_rows(res["clusters"])}
+
+
+@pytest.fixture(scope="module")
+def link_run(spark, tiny, tmp_path_factory):
+    """One checkpointed link pass over ``tiny`` split by conversation
+    into an A and a B side, shared by this module."""
+    t = tiny["transcripts"]
+    side = F.abs(F.xxhash64("conv_id")) % 2
+    a, b = t.filter(side == 0), t.filter(side == 1)
+    wd = str(tmp_path_factory.mktemp("link_catalog"))
+    res = run_link_pipeline(spark, a, b, CFG, workdir=wd)
+    return {"a": a, "b": b, "workdir": wd,
+            "matches": _sorted_rows(res["matches"])}
+
+
+def _strip_schema(root: str, stage: str) -> None:
+    """Rewrite ``stage``'s manifest entry as written before schemas were
+    recorded."""
+    path = os.path.join(root, Catalog.MANIFEST)
+    with open(path) as fh:
+        manifest = json.load(fh)
+    del manifest[stage]["schema"]
+    with open(path, "w") as fh:
+        json.dump(manifest, fh)
 
 
 def test_partition_pruning_reaches_scan(spark, tiny, tmp_path):
@@ -140,18 +184,12 @@ def test_iceberg_table_name_sanitizes_path_namespace(spark, tmp_path):
     assert _re.fullmatch(r"[A-Za-z0-9_]+", ns)
 
 
-def test_lineage_frame_exposes_per_partition_rows(spark, tiny, tmp_path):
+def test_lineage_frame_exposes_per_partition_rows(spark, dedup_run):
     """The manifest as data: one row per (stage, partition), stage totals
     equal the sum of partition rows, fingerprints/snapshots present."""
-    from pyspark.sql import functions as F
+    from translink.catalog import lineage_frame
 
-    from translink.catalog import Catalog, lineage_frame
-    from translink.config import LinkConfig
-    from translink.pipeline import run_pipeline
-
-    workdir = str(tmp_path / "wd_lineage")
-    run_pipeline(spark, tiny["transcripts"], LinkConfig(), workdir=workdir)
-    lf = lineage_frame(spark, Catalog(spark, workdir))
+    lf = lineage_frame(spark, Catalog(spark, dedup_run["workdir"]))
     assert lf.count() > 0
     # per-stage: partition rows sum to the recorded stage total
     agg = (
@@ -165,3 +203,76 @@ def test_lineage_frame_exposes_per_partition_rows(spark, tiny, tmp_path):
     assert lf.filter(
         F.col("fingerprint").isNull() | F.col("snapshot_id").isNull()
     ).count() == 0
+
+
+def test_resumed_pipelines_start_no_spark_job(spark, tiny, dedup_run, link_run):
+    """A fully resumed pass reads every checkpoint back with its recorded
+    schema: no schema-inference job, so no Spark job at all inside the
+    call (a plain ``spark.read.parquet`` per stage started 6 dedup and 4
+    link jobs)."""
+    res, jobs = jobs_started(spark, lambda: run_pipeline(
+        spark, tiny["transcripts"], CFG, workdir=dedup_run["workdir"]))
+    assert all(v == 0.0 for v in res["timings"].values()), res["timings"]
+    assert jobs == []
+    assert _sorted_rows(res["clusters"]) == dedup_run["clusters"]
+
+    res, jobs = jobs_started(spark, lambda: run_link_pipeline(
+        spark, link_run["a"], link_run["b"], CFG,
+        workdir=link_run["workdir"]))
+    assert all(v == 0.0 for v in res["timings"].values()), res["timings"]
+    assert jobs == []
+    assert _sorted_rows(res["matches"]) == link_run["matches"]
+
+
+def test_read_stage_schema_equals_inferred(spark, dedup_run, link_run):
+    """The recorded schema, nullability included, is the one Spark infers
+    from the files: every stage plans exactly as an inferred read would."""
+    for run in (dedup_run, link_run):
+        cat = Catalog(spark, run["workdir"])
+        stages = sorted(cat.lineage())
+        assert stages
+        for stage in stages:
+            inferred = spark.read.parquet(cat.stage_path(stage)).schema
+            assert cat.read_stage(stage).schema == inferred, stage
+
+
+def test_entry_without_schema_is_recomputed(spark, tiny, dedup_run):
+    """A manifest entry with the right fingerprint but no recorded schema
+    (a catalog written before schemas were recorded) is recomputed once,
+    not read through a schema-inferring path, and gives the same
+    clusters."""
+    wd = dedup_run["workdir"]
+    _strip_schema(wd, "clusters")
+    cat = Catalog(spark, wd)
+    with pytest.raises(ValueError, match="no recorded schema"):
+        cat.read_stage("clusters")
+    res = run_pipeline(spark, tiny["transcripts"], CFG, workdir=wd)
+    assert res["timings"]["clusters"] > 0.0
+    assert res["timings"]["scored"] == 0.0
+    assert _sorted_rows(res["clusters"]) == dedup_run["clusters"]
+    assert "schema" in cat.lineage()["clusters"]
+
+
+def test_reference_store_without_schema_is_refused(spark, tiny, tmp_path):
+    """A reference store written before schemas were recorded holds the
+    right fingerprint but cannot be read back without inference:
+    ``incremental_link`` refuses it before the stream starts and says to
+    rerun ``prepare_reference``, which makes it usable."""
+    from translink.streaming.link import (
+        A_PREP, incremental_link, prepare_reference,
+    )
+
+    store = str(tmp_path / "store")
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    a = tiny["transcripts"].filter(F.col("conv_id").isin(
+        [r["conv_id"] for r in tiny["transcripts"].select("conv_id")
+         .distinct().limit(3).collect()]))
+    prepare_reference(spark, a, store, CFG)
+    _strip_schema(store, A_PREP)
+    with pytest.raises(ValueError) as err:
+        incremental_link(spark, landing, store, str(tmp_path / "ckpt"), CFG)
+    msg = str(err.value)
+    assert "without a recorded schema" in msg and "prepare_reference" in msg
+    prepare_reference(spark, a, store, CFG)
+    assert Catalog(spark, store).has_stage(A_PREP, CFG.fingerprint())

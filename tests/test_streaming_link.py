@@ -178,3 +178,21 @@ def test_reference_store_fingerprinted(spark, tmp_path, monkeypatch):
     link(store).awaitTermination(300)
     (row,) = read_match_store(spark, store).collect()
     assert (row["conv_id_a"], row["conv_id_b"]) == ("a1", "b1")
+
+
+def test_match_store_read_errors_propagate(spark, tmp_path):
+    """Only a match store that does not exist yet means "no earlier
+    matches". An existing store that cannot be read must fail the batch:
+    taking it as empty would let already-assigned A records be assigned
+    again."""
+    from translink.streaming.link import MATCHES, _read_matches_before
+
+    store = str(tmp_path / "store")
+    assert _read_matches_before(spark, store, 0) is None
+    part = tmp_path / "store" / MATCHES / "batch_id=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not a parquet file")
+    prior = _read_matches_before(spark, store, 1)
+    assert prior is not None
+    with pytest.raises(Exception, match="(?i)parquet"):
+        prior.collect()

@@ -6,11 +6,15 @@ write with ``writeTo(table).createOrReplace()``.
 
 Sandbox path (no Iceberg jar, SURVEY §7.0): plain Parquet directories plus a
 ``_manifest.json`` sidecar carrying the same facts — stage fingerprint,
-snapshot id, row count, per-partition lineage rows — so checkpoint/resume
-semantics are identical and testable offline. Resume = skip any stage whose
-manifest entry matches the current config fingerprint (the reference's F6
-idempotence guards: records already enriched are not recomputed,
-``src/pipeline/streaming_quickcheck.rs:112-114``).
+schema, snapshot id, row count, per-partition lineage rows — so
+checkpoint/resume semantics are identical and testable offline. Resume =
+skip any stage whose manifest entry matches the current config fingerprint
+(the reference's F6 idempotence guards: records already enriched are not
+recomputed, ``src/pipeline/streaming_quickcheck.rs:112-114``). A stage is
+read back with the schema its entry records, as Iceberg reads a table's
+schema from its metadata, so a resume starts no Spark job: a plain
+``spark.read.parquet`` runs a footer-reading job to infer the schema on
+every call.
 """
 
 from __future__ import annotations
@@ -23,6 +27,16 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(jvm, FileSystem, Path)`` for ``path`` through the Hadoop
+    FileSystem API, so local / HDFS / s3a paths all work."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return jvm, p.getFileSystem(conf), p
 
 
 def input_content_fingerprint(spark: SparkSession, path: str) -> str:
@@ -33,10 +47,7 @@ def input_content_fingerprint(spark: SparkSession, path: str) -> str:
     fingerprint would silently reuse every checkpointed stage and return
     clusters computed from the old data. For Iceberg tables, the snapshot id
     plays this role instead."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    _, fs, p = hadoop_fs(spark, path)
     entries = []
     if fs.exists(p):
         it = fs.listFiles(p, True) if fs.getFileStatus(p).isDirectory() else None
@@ -86,10 +97,7 @@ class Catalog:
         return os.path.join(self.root, self.MANIFEST)
 
     def _hadoop_fs(self):
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(self.manifest_path)
-        return jvm, path.getFileSystem(conf), path
+        return hadoop_fs(self.spark, self.manifest_path)
 
     def _read_manifest(self) -> dict:
         if self._is_remote():
@@ -147,13 +155,30 @@ class Catalog:
     # -- stage IO ---------------------------------------------------------
 
     def has_stage(self, stage: str, fingerprint: str) -> bool:
-        entry = self._read_manifest().get(stage)
-        return bool(entry) and entry.get("fingerprint") == fingerprint
+        """True when the manifest holds ``stage`` under ``fingerprint``
+        with its schema recorded. An entry written before schemas were
+        recorded is not resumable: the stage is recomputed once."""
+        entry = self._read_manifest().get(stage) or {}
+        return entry.get("fingerprint") == fingerprint and "schema" in entry
 
     def read_stage(self, stage: str) -> DataFrame:
+        """The stage's checkpoint, read with the schema its manifest entry
+        records (Iceberg: the table's own metadata), so no Spark job runs.
+        Raises ``ValueError`` for a stage without a recorded schema; callers
+        check ``has_stage`` first."""
         if self._iceberg_catalog:
             return self.spark.read.table(self._table_name(stage))
-        return self.spark.read.parquet(self.stage_path(stage))
+        entry = self._read_manifest().get(stage) or {}
+        if "schema" not in entry:
+            raise ValueError(
+                f"stage {stage!r} has no recorded schema in "
+                f"{self.manifest_path}: recompute it"
+            )
+        return self._read_parquet(self.stage_path(stage), entry["schema"])
+
+    def _read_parquet(self, path: str, schema_json: str) -> DataFrame:
+        schema = StructType.fromJson(json.loads(schema_json))
+        return self.spark.read.schema(schema).parquet(path)
 
     def _table_name(self, stage: str) -> str:
         # the namespace is derived from a filesystem path: every character
@@ -172,14 +197,19 @@ class Catalog:
     ) -> DataFrame:
         """Persist a stage output and record lineage + metrics.
 
-        Lineage recorded per stage: snapshot id, wall time, row count and
+        Lineage recorded per stage: the written schema
+        (``df.schema.json()``), snapshot id, wall time, row count and
         per-partition row counts (the analog of the reference's per-stage
         atomic counters + snapshot pattern, ``src/walker_hp.rs:57-100``).
         Returns the re-read DataFrame so downstream stages read the
-        checkpoint, not the live lineage.
+        checkpoint, not the live lineage; reading it back with the recorded
+        schema runs no job. File sources make a given schema nullable, as
+        they make an inferred one, so the read-back schema equals
+        ``spark.read.parquet``'s.
         """
         t0 = time.time()
         snapshot_id = uuid.uuid4().hex[:16]
+        schema_json = df.schema.json()
         if self._iceberg_catalog:
             df.writeTo(self._table_name(stage)).using("iceberg").createOrReplace()
             part_rows = []
@@ -190,11 +220,12 @@ class Catalog:
             # per-partition lineage from parquet footers (driver-side,
             # milliseconds) — re-reading the table for a groupBy would
             # decode every array column a second time
-            part_rows = self._footer_partition_rows(path)
+            part_rows = self._footer_partition_rows(path, schema_json)
             n_rows = sum(p["rows"] for p in part_rows)
         manifest = self._read_manifest()
         manifest[stage] = {
             "fingerprint": fingerprint,
+            "schema": schema_json,
             "snapshot_id": snapshot_id,
             "rows": n_rows,
             "partitions": part_rows,
@@ -205,7 +236,7 @@ class Catalog:
         self._write_manifest(manifest)
         return self.read_stage(stage)
 
-    def _footer_partition_rows(self, path: str) -> list[dict]:
+    def _footer_partition_rows(self, path: str, schema_json: str) -> list[dict]:
         """One lineage row per output file (file == write partition):
         row counts read from parquet footers, no data decode."""
         try:
@@ -224,9 +255,10 @@ class Catalog:
                 for i, f in enumerate(files)
             ]
         except Exception:
-            # remote paths / missing pyarrow: fall back to a metadata count
+            # remote paths / missing pyarrow: fall back to a count job,
+            # read with the written schema so no inference job runs first
             return [{"partition_id": 0, "file": None,
-                     "rows": self.spark.read.parquet(path).count()}]
+                     "rows": self._read_parquet(path, schema_json).count()}]
 
     def invalidate(self, stage: str) -> None:
         manifest = self._read_manifest()

@@ -41,7 +41,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from translink.catalog import Catalog
+from translink.catalog import Catalog, hadoop_fs
 from translink.config import LinkConfig
 from translink.fellegi_sunter import FSParams
 from translink.linkage import _score_and_resolve, prep_corpus as _prep
@@ -49,6 +49,11 @@ from translink.streaming.incremental import stream_transcript_dir
 
 A_PREP = "link_a_prep"
 MATCHES = "link_matches"
+#: The match store's fixed schema (``batch_id`` is its partition column).
+#: Reading with it runs no schema-inference job per micro-batch.
+MATCH_SCHEMA = (
+    "conv_id_a string, conv_id_b string, score double, batch_id long"
+)
 
 
 def prepare_reference(
@@ -108,9 +113,14 @@ def incremental_link(
     fp = cfg.fingerprint()
     if not cat.has_stage(A_PREP, fp):
         found = cat.lineage().get(A_PREP, {}).get("fingerprint")
+        held = (
+            f"holds {A_PREP} without a recorded schema (written by an "
+            f"older engine)" if found == fp else
+            f"holds {A_PREP} with fingerprint {found!r}, this config's "
+            f"is {fp!r}"
+        )
         raise ValueError(
-            f"reference store {store_dir!r} holds {A_PREP} with fingerprint "
-            f"{found!r}, this config's is {fp!r}: rerun prepare_reference"
+            f"reference store {store_dir!r} {held}: rerun prepare_reference"
         )
     matches_path = os.path.join(store_dir, MATCHES)
     stream = stream_transcript_dir(spark, landing_dir)
@@ -120,7 +130,7 @@ def incremental_link(
             return
         a_prep = cat.read_stage(A_PREP)
         b_prep = _prep(batch_df, cfg)
-        prior = _read_matches_before(spark, matches_path, int(batch_id))
+        prior = _read_matches_before(spark, store_dir, int(batch_id))
         if prior is not None:
             # first-come-first-served: taken A records and already-decided
             # B conversations never re-enter the assignment
@@ -157,18 +167,22 @@ def incremental_link(
 
 
 def _read_matches_before(
-    spark: SparkSession, matches_path: str, batch_id: int
+    spark: SparkSession, store_dir: str, batch_id: int
 ) -> DataFrame | None:
     """Matches from strictly earlier batches (replay safety), or None on
-    the first batch (path not written yet)."""
-    try:
-        m = spark.read.parquet(matches_path)
-    except Exception:
+    the first batch (match store not written yet). Existence is checked
+    through the Hadoop FileSystem API, so a remote store works; every read
+    error of an existing store propagates."""
+    _, fs, path = hadoop_fs(spark, os.path.join(store_dir, MATCHES))
+    if not fs.exists(path):
         return None
+    m = read_match_store(spark, store_dir)
     return m.filter(F.col("batch_id") < F.lit(batch_id))
 
 
 def read_match_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Every streamed match: (conv_id_a, conv_id_b, score, batch_id).
     One row per A and per B by construction (the per-batch anti-joins)."""
-    return spark.read.parquet(os.path.join(store_dir, MATCHES))
+    return spark.read.schema(MATCH_SCHEMA).parquet(
+        os.path.join(store_dir, MATCHES)
+    )
